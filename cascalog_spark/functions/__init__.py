@@ -2,8 +2,9 @@
 
 DataFrame → DataFrame library functions, all designed partition-parallel for
 100 TB scale: no driver-side collects, native Column expressions wherever the
-semantics allow, Arrow-vectorized pandas UDFs only for genuinely bit-twiddly
-ops (simhash), and LSH-style bucketing so nothing is O(n²) across the corpus.
+semantics allow, Arrow-batched UDFs only where an expression would run
+per element in the interpreter (simhash, lang_id scoring), and LSH-style
+bucketing so nothing is O(n²) across the corpus.
 """
 
 from .corpus import (balanced_shards, bloom_contains, boilerplate_lines,

@@ -4,8 +4,8 @@ context-window sequence packing.
 
 These are the pipeline stages between "raw filtered docs" and "training
 batches".  All are native DataFrame compositions (no Python in the hot
-path) with exact ANSI-SQL twins for the DuckDB oracle, and each is shaped
-for 100 TB:
+path, apart from the lang_id Arrow UDF inside ``corpus_report``) with
+exact ANSI-SQL twins for the DuckDB oracle, and each is shaped for 100 TB:
 
 - decontamination broadcasts the BENCHMARK shingle set (benchmarks are
   MBs; the corpus is the big side and is never collected or shuffled
@@ -871,8 +871,9 @@ def corpus_report(df: DataFrame, id_col: str = "doc_id",
     mean quality score, the dominant language and its share, and the
     exact duplicate-text rate.
 
-    Cost model: one map pass computes per-doc tokens/quality/lang (all
-    native Column chains), then a handful of O(1)-output aggregates; the
+    Cost model: one map pass computes per-doc tokens/quality/lang (native
+    Column chains plus lang_id's Arrow UDF), then a handful of O(1)-output
+    aggregates; the
     language top-1 is a groupBy on <= #langs keys; the dup rate is one
     count-distinct over md5(text).  Every statistic is deterministic
     (exact interpolated percentiles, md5 keys), so any engine reproduces

@@ -1,17 +1,22 @@
 """Text analysis operators for training-data pipelines.
 
-All native Column expressions (JVM-side, codegen'd, no Python in the hot
-path): language-ID by stopword-hit heuristic, quality scoring from
-length/alpha/stopword ratios, token counting, and shingle-based document
-fingerprinting.  Each has an exact ANSI-SQL twin used as the DuckDB oracle
-(see __spark_entry__.oracle_sql).
+Tokenization, quality scoring, token counting and shingle-based document
+fingerprinting are native Column expressions (JVM-side, codegen'd).
+Language-ID tokenizes the same way in the JVM, then scores the token
+lists per Arrow batch in one vectorized UDF (``_lang_pred``).  Each
+operator has an exact ANSI-SQL twin used as the DuckDB oracle (see
+__spark_entry__.oracle_sql).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Small per-language stopword lists for the n-gram/stopword heuristic.
 # Deliberately tiny + deterministic — the operator contract is the pipeline
@@ -28,9 +33,12 @@ TOKEN_SPLIT = r"\s+"
 
 
 def tokens_col(text: Column) -> Column:
-    """Whitespace tokenization of lowercased text, empty tokens dropped."""
-    return F.filter(F.split(F.lower(text), TOKEN_SPLIT),
-                    lambda t: t != F.lit(""))
+    """Whitespace tokenization of lowercased text, empty tokens dropped.
+
+    ``array_remove`` is code-generated, where a ``filter`` lambda runs
+    interpreted per element; ``split`` yields no null elements, so
+    removing ``""`` drops exactly the empty tokens."""
+    return F.array_remove(F.split(F.lower(text), TOKEN_SPLIT), "")
 
 
 def tokenize(df: DataFrame, text_col: str = "text",
@@ -54,9 +62,26 @@ def bpe_ish_token_count(df: DataFrame, text_col: str = "text",
                                              F.lit(pattern), 0)))
 
 
-def _stopword_hits(toks: Column, words: list[str]) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
+_LANGS = sorted(STOPWORDS)
+_LANG_WORDS = [pa.array(STOPWORDS[lang]) for lang in _LANGS]
+_LANG_NAMES = pa.array([*_LANGS, "und"])
+
+
+@F.arrow_udf(T.StringType())
+def _lang_pred(toks: pa.Array) -> pa.Array:
+    """Per Arrow batch of token lists: stopword hits per language via one
+    ``is_in`` over the flattened tokens, summed per document with
+    ``bincount``; argmax picks the alphabetically first language of a tie
+    and 'und' when nothing hit.  Null lists get no hits."""
+    flat = pc.list_flatten(toks)
+    parent = pc.list_parent_indices(toks).to_numpy()
+    hits = np.stack([
+        np.bincount(parent[pc.is_in(flat, value_set=words)
+                           .to_numpy(zero_copy_only=False)],
+                    minlength=len(toks))
+        for words in _LANG_WORDS])
+    best = np.where(hits.max(axis=0) > 0, hits.argmax(axis=0), len(_LANGS))
+    return _LANG_NAMES.take(pa.array(best))
 
 
 def lang_id(df: DataFrame, text_col: str = "text",
@@ -64,25 +89,10 @@ def lang_id(df: DataFrame, text_col: str = "text",
     """Language ID: per-language stopword-hit counts → argmax, ties broken
     alphabetically then 'und' (undetermined) when no stopword hits at all.
 
-    Scale note: one pass over the token array per language, all inside
-    whole-stage codegen; no shuffle.
+    Scale note: the JVM tokenizes (``tokens_col``); one Arrow UDF per
+    batch scores every language at once; no shuffle.
     """
-    toks = tokens_col(F.col(text_col))
-    df = df.withColumn("__toks", toks)
-    scored = F.array(*[
-        F.struct(_stopword_hits(F.col("__toks"), words).alias("score"),
-                 F.lit(lang).alias("lang"))
-        for lang, words in sorted(STOPWORDS.items())])
-    # max by (score, lang-reversed) → highest score, alphabetically-first tie
-    best = F.aggregate(
-        scored,
-        F.struct(F.lit(-1).cast("int").alias("score"),
-                 F.lit("").alias("lang")),
-        lambda acc, x: F.when(x["score"] > acc["score"], x).otherwise(acc))
-    return (df.withColumn(
-        out_col,
-        F.when(best["score"] <= 0, F.lit("und")).otherwise(best["lang"]))
-        .drop("__toks"))
+    return df.withColumn(out_col, _lang_pred(tokens_col(F.col(text_col))))
 
 
 def quality_score(df: DataFrame, text_col: str = "text",

@@ -2,6 +2,8 @@
 driver's documents/embeddings tables — the same oracle strategy the driver's
 correctness gate uses."""
 
+import hashlib
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -70,6 +72,22 @@ def test_lang_id_runs(docs, duck):
     out = lang_id(docs).groupBy("lang_pred").count()
     rows = dict((r[0], r[1]) for r in out.collect())
     assert sum(rows.values()) == docs.count()
+
+
+def test_lang_id_exact(spark):
+    """Ties go to the alphabetically first language, no hit / null /
+    empty text is 'und', and tokens are lowercased before matching."""
+    df = spark.createDataFrame(
+        [(1, "la casa de un amigo"),        # fr and es both score 3
+         (2, "zzz qqq xyz"),                # no stopword at all
+         (3, None),
+         (4, ""),
+         (5, "The Cat AND the Dog"),        # mixed case, en
+         (6, "Der Hund UND die Katze")],    # mixed case, de
+        "doc_id bigint, text string")
+    got = dict(lang_id(df).select("doc_id", "lang_pred").collect())
+    assert got == {1: "es", 2: "und", 3: "und", 4: "und", 5: "en",
+                   6: "de"}
 
 
 def test_quality_score_vs_duck(docs, duck):
@@ -422,6 +440,55 @@ def test_shingle_fingerprint_stability(spark):
         ["id", "text"])
     out = {r.id: r.shingle_fp for r in shingle_fingerprint(df).collect()}
     assert out[1] == out[2] != out[3]
+
+
+def _simhash_definition(text):
+    """SimHash as first written: one md5 and a 64-step loop per token."""
+    if text is None:
+        return None
+    counts = [0] * 64
+    for tok in text.lower().split():
+        h = int.from_bytes(
+            hashlib.md5(tok.encode("utf-8")).digest()[:8], "big")
+        for i in range(64):
+            counts[i] += 1 if (h >> i) & 1 else -1
+    v = 0
+    for i in range(64):
+        if counts[i] > 0:
+            v |= (1 << i)
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def test_simhash_kernel_matches_definition(monkeypatch):
+    """The batched kernel is bit-identical to the per-token loop, across
+    chunk boundaries too; runs on pandas alone, with no JVM."""
+    import pandas as pd
+
+    from cascalog_spark.functions import dedup
+
+    cases = [None, "", "  \t\n  ", "İstanbul", "ΟΔΥΣΣΕΥΣ σοφός",
+             "a\u00a0b c", "the quick brown fox jumps over the lazy dog",
+             "spam spam spam spam eggs", "lorem ipsum dolor sit amet"]
+    cases.append(" ".join(cases[3:] * 3))  # longer than a small chunk
+    want = [_simhash_definition(t) for t in cases]
+    assert any(v is not None and v < 0 for v in want)  # top bit set
+    for chunk in (1, 5, dedup.SIMHASH_CHUNK_TOKENS):
+        monkeypatch.setattr(dedup, "SIMHASH_CHUNK_TOKENS", chunk)
+        got = dedup._simhash64.func(pd.Series(cases))
+        assert str(got.dtype) == "Int64"
+        assert [None if pd.isna(v) else int(v) for v in got] == want
+
+
+def test_simhash_null_keeps_batch_precision(spark):
+    """A null text in an Arrow batch must not round the other rows'
+    hashes through float64."""
+    rows = [(1, "the quick brown fox jumps over the lazy dog"),
+            (2, "lorem ipsum dolor sit amet"), (3, None)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = dict(simhash(df.coalesce(1)).select("doc_id", "simhash")
+               .collect())
+    assert got == {i: _simhash_definition(t) for i, t in rows}
+    assert got[1] == 1140603644929599182
 
 
 def test_simhash_near_dups_exact_match(spark):

@@ -643,9 +643,9 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
 
 
 def test_streaming_pipeline_ops_batch_equivalence(spark, tmp_path):
-    """The text pipeline ops are pure Column chains, so they compose
-    with readStream unchanged: quality_score + lang_id over a stream
-    must emit exactly the batch result."""
+    """The text pipeline ops are per-row Column expressions and a scalar
+    Arrow UDF, so they compose with readStream unchanged: quality_score
+    + lang_id over a stream must emit exactly the batch result."""
     from cascalog_spark.functions import lang_id, quality_score
     from cascalog_spark.streaming import stream_tap, stream_to_memory
 
