@@ -56,14 +56,12 @@ class Query:
         """Compile with a caller-supplied Compiler (multi-sink ``execute``
         shares one fan-out memo across queries this way; flow.clj:96-112
         Semigroup-summed flows)."""
-        df = compiler.compile(self.plan())
-        self._trap_dfs = compiler.trap_dfs
-        self._nested_trapped = compiler.nested_trapped
         # dynamic typing: remember which OUTPUT positions hold pickled
         # Python objects so run() can decode them (to_df leaves binary)
-        self._pickled_idx = [i for i, c in enumerate(df.columns)
-                             if c in compiler.pickled_cols]
-        df = df.toDF(*out_names(self.outfields))
+        df, self._pickled_idx = compiler.compile_output(
+            self.plan(), out_names(self.outfields))
+        self._trap_dfs = compiler.trap_dfs
+        self._nested_trapped = compiler.nested_trapped
         limit = self.options.get("limit")
         if limit is not None:
             # extension option (no reference analog): cap rows after the

@@ -3,9 +3,14 @@
 JCascalog op classes (src/java/jcascalog/op/*.java) and cascalog-math stats
 (cascalog-math/src/cascalog/math/stats.clj:7-48).
 
-Everything here is a native Column-expression op, so Catalyst sees through it
-(predicate pushdown, codegen, partial aggregation all apply) — the single most
-important perf decision vs the reference's opaque-JVM-closure ops (SURVEY §4).
+Every op here carries a SQL expression template (``expr_op`` /
+``expr_filter`` / ``expr_agg``) with the exact semantics of the matching
+Spark function, so Catalyst sees through it (predicate pushdown, codegen,
+partial aggregation all apply) — the single most important perf decision
+vs the reference's opaque-JVM-closure ops (SURVEY §4).  The compiler
+splices templates into one string step per planner node, so a built-in
+costs no PySpark ``Column`` construction on the driver.  ``py_fn`` mirrors
+run the same ops on the in-memory platform.
 """
 
 from __future__ import annotations
@@ -15,7 +20,8 @@ import operator as _pyop
 from pyspark.sql import functions as F
 
 from .ops import (BufferOp, FilterOp, LimitAgg, MapcatOp, MapOp, ParallelAgg,
-                  column_filter, column_op)
+                  column_filter, column_op, expr_agg, expr_filter, expr_op,
+                  lit_col, render_sql, sql_lit, with_sql)
 
 # ---------------------------------------------------------------------------
 # scalar map ops (JCascalog Plus/Minus/Multiply/Div + api.clj `div`)
@@ -40,19 +46,39 @@ def _jmod(a, b):
     return int(r) if isinstance(a, int) and isinstance(b, int) else r
 
 
-add = column_op("add", lambda *cs: _reduce_bin(lambda a, b: a + b, cs),
-                py_fn=_ng(lambda *vs: _reduce_bin(lambda a, b: a + b, vs)))
-sub = column_op("sub", lambda *cs: _reduce_bin(lambda a, b: a - b, cs) if len(cs) > 1 else -cs[0],
-                py_fn=_ng(lambda *vs: _reduce_bin(lambda a, b: a - b, vs)
-                          if len(vs) > 1 else -vs[0]))
-mult = column_op("mult", lambda *cs: _reduce_bin(lambda a, b: a * b, cs),
-                 py_fn=_ng(lambda *vs: _reduce_bin(lambda a, b: a * b, vs)))
-# div coerces to double — reference: api.clj:237-242 (Ratio-safe division)
-div = column_op("div", lambda *cs: _reduce_bin(lambda a, b: a.cast("double") / b, cs),
-                py_fn=_ng(lambda *vs: _reduce_bin(
-                    lambda a, b: float(a) / b, vs)))
-mod = column_op("mod", lambda a, b: a % b, py_fn=_ng(_jmod))
-negate_num = column_op("neg", lambda c: -c, py_fn=_ng(lambda v: -v))
+def _infix(sym):
+    """Left-associative variadic infix template: ``(a + b + c)``; one
+    input passes through unchanged."""
+    return lambda *fs: fs[0] if len(fs) == 1 \
+        else "(" + f" {sym} ".join(fs) + ")"
+
+
+def _div_sql(*fs):
+    # each step divides a double (api.clj:237-242 Ratio-safe division)
+    acc = fs[0]
+    for f in fs[1:]:
+        acc = f"(CAST({acc} AS DOUBLE) / {f})"
+    return acc
+
+
+def _call(fn):
+    """Template for a variadic SQL function call: ``fn(a, b, ...)``."""
+    return lambda *fs: f"{fn}({', '.join(fs)})"
+
+
+add = expr_op("add", _infix("+"),
+              py_fn=_ng(lambda *vs: _reduce_bin(lambda a, b: a + b, vs)))
+sub = expr_op("sub", lambda *fs: _infix("-")(*fs) if len(fs) > 1
+              else f"(- {fs[0]})",
+              py_fn=_ng(lambda *vs: _reduce_bin(lambda a, b: a - b, vs)
+                        if len(vs) > 1 else -vs[0]))
+mult = expr_op("mult", _infix("*"),
+               py_fn=_ng(lambda *vs: _reduce_bin(lambda a, b: a * b, vs)))
+div = expr_op("div", _div_sql,
+              py_fn=_ng(lambda *vs: _reduce_bin(lambda a, b: float(a) / b,
+                                                vs)))
+mod = expr_op("mod", "({0} % {1})", py_fn=_ng(_jmod))
+negate_num = expr_op("neg", "(- {0})", py_fn=_ng(lambda v: -v))
 
 
 def _reduce_bin(f, cols):
@@ -63,25 +89,27 @@ def _reduce_bin(f, cols):
 
 
 # comparison filters (JCascalog LT/GT/LTE/GTE/Equals)
-lt = column_filter("lt", lambda a, b: a < b, py_fn=_ng(_pyop.lt))
-gt = column_filter("gt", lambda a, b: a > b, py_fn=_ng(_pyop.gt))
-lte = column_filter("lte", lambda a, b: a <= b, py_fn=_ng(_pyop.le))
-gte = column_filter("gte", lambda a, b: a >= b, py_fn=_ng(_pyop.ge))
-eq = column_filter("eq", lambda *cs: _all_pairs_eq(cs),
-                   py_fn=lambda *vs: all(_null_eq(vs[0], v)
-                                         for v in vs[1:]))
+lt = expr_filter("lt", "({0} < {1})", py_fn=_ng(_pyop.lt))
+gt = expr_filter("gt", "({0} > {1})", py_fn=_ng(_pyop.gt))
+lte = expr_filter("lte", "({0} <= {1})", py_fn=_ng(_pyop.le))
+gte = expr_filter("gte", "({0} >= {1})", py_fn=_ng(_pyop.ge))
+# null-safe <=>: Clojure (= nil nil) is true, and the engine's implicit
+# dup-var equality uses null-safe compare — keep !var semantics
+# consistent (ADVICE r1)
+eq = expr_filter("eq", lambda *fs: "(" + " AND ".join(
+                     f"{fs[0]} <=> {f}" for f in fs[1:]) + ")",
+                 py_fn=lambda *vs: all(_null_eq(vs[0], v) for v in vs[1:]))
 # null-safe negation: Clojure (not= nil nil) is false; plain != drops
 # rows where either side is null (ADVICE r1)
-ne = column_filter("ne", lambda a, b: ~a.eqNullSafe(b),
-                   py_fn=lambda a, b: not _null_eq(a, b))
-odd = column_filter("odd", lambda c: c % 2 != 0,
-                    py_fn=_ng(lambda v: _jmod(v, 2) != 0))
-even = column_filter("even", lambda c: c % 2 == 0,
-                     py_fn=_ng(lambda v: _jmod(v, 2) == 0))
-is_null = column_filter("is_null", lambda c: c.isNull(),
-                        py_fn=lambda v: v is None)
-not_null = column_filter("not_null", lambda c: c.isNotNull(),
-                         py_fn=lambda v: v is not None)
+ne = expr_filter("ne", "(NOT ({0} <=> {1}))",
+                 py_fn=lambda a, b: not _null_eq(a, b))
+odd = expr_filter("odd", "({0} % 2 != 0)",
+                  py_fn=_ng(lambda v: _jmod(v, 2) != 0))
+even = expr_filter("even", "({0} % 2 = 0)",
+                   py_fn=_ng(lambda v: _jmod(v, 2) == 0))
+is_null = expr_filter("is_null", "({0} IS NULL)", py_fn=lambda v: v is None)
+not_null = expr_filter("not_null", "({0} IS NOT NULL)",
+                       py_fn=lambda v: v is not None)
 
 
 def _null_eq(a, b) -> bool:
@@ -92,26 +120,20 @@ def _null_eq(a, b) -> bool:
     return a == b
 
 
-def _all_pairs_eq(cs):
-    # eqNullSafe: Clojure (= nil nil) is true, and the engine's implicit
-    # dup-var equality uses null-safe compare — keep !var semantics
-    # consistent (ADVICE r1)
-    acc = cs[0].eqNullSafe(cs[1])
-    for c in cs[2:]:
-        acc = acc & cs[0].eqNullSafe(c)
-    return acc
-
-
 # string ops
-str_concat = column_op(
-    "str", lambda *cs: F.concat(*[c.cast("string") for c in cs]),
+def _concat_sql(*fs):
+    return "concat(" + ", ".join(f"CAST({f} AS STRING)" for f in fs) + ")"
+
+
+str_concat = expr_op(
+    "str", _concat_sql,
     py_fn=_ng(lambda *vs: "".join(_spark_str(v) for v in vs)))
-lower = column_op("lower", F.lower, py_fn=_ng(str.lower))
-upper = column_op("upper", F.upper, py_fn=_ng(str.upper))
-trim = column_op("trim", F.trim, py_fn=_ng(lambda s: s.strip(" ")))
-length = column_op("length", F.length, py_fn=_ng(len))
-substring = column_op(
-    "substring", lambda c, start, ln: F.substring(c, start, ln),
+lower = expr_op("lower", "lower({0})", py_fn=_ng(str.lower))
+upper = expr_op("upper", "upper({0})", py_fn=_ng(str.upper))
+trim = expr_op("trim", "trim({0})", py_fn=_ng(lambda s: s.strip(" ")))
+length = expr_op("length", "length({0})", py_fn=_ng(len))
+substring = expr_op(
+    "substring", "substring({0}, {1}, {2})",
     py_fn=_ng(lambda s, start, ln: _substr(s, start, ln)))
 
 
@@ -141,7 +163,8 @@ def re_parse(pattern: str) -> MapcatOp:
     import re as _re
 
     return MapcatOp(name="re-parse",
-                    column_fn=lambda c, _p=pattern: F.regexp_extract_all(c, F.lit(_p), 0),
+                    sql_template=lambda f, _p=sql_lit(pattern):
+                    f"regexp_extract_all({f}, {_p}, 0)",
                     py_fn=_ng(lambda s, _p=pattern:
                               [m.group(0) for m in _re.finditer(_p, s)]))
 
@@ -153,9 +176,10 @@ def re_extract(pattern: str, group: int = 1) -> MapOp:
         m = _re.search(_p, s)
         return m.group(_g) if m else ""  # Spark: no match -> empty string
 
-    return MapOp(name="re-extract",
-                 column_fn=lambda c, _p=pattern, _g=group: F.regexp_extract(c, _p, _g),
-                 py_fn=_ng(_py))
+    return expr_op("re-extract",
+                   lambda f, _p=sql_lit(pattern), _g=int(group):
+                   f"regexp_extract({f}, {_p}, {_g})",
+                   py_fn=_ng(_py))
 
 
 def split(pattern: str = r"\s+") -> MapcatOp:
@@ -164,7 +188,8 @@ def split(pattern: str = r"\s+") -> MapcatOp:
 
     return MapcatOp(
         name="split",
-        column_fn=lambda c, _p=pattern: F.filter(F.split(c, _p), lambda x: x != F.lit("")),
+        sql_template=lambda f, _p=sql_lit(pattern):
+        f"filter(split({f}, {_p}), t -> t != '')",
         py_fn=_ng(lambda s, _p=pattern:
                   [t for t in _re.split(_p, s) if t != ""]))
 
@@ -184,18 +209,17 @@ def _py_to_ts(v):
 
 
 # date ops (Cascading DateParser analog — cascading_api_test.clj:43-76)
-date_parse = column_op("date_parse", lambda c: F.to_timestamp(c),
-                       py_fn=_ng(_py_to_ts))
-year_of = column_op("year", F.year, py_fn=_ng(lambda d: d.year))
-month_of = column_op("month", F.month, py_fn=_ng(lambda d: d.month))
+date_parse = expr_op("date_parse", "to_timestamp({0})", py_fn=_ng(_py_to_ts))
+year_of = expr_op("year", "year({0})", py_fn=_ng(lambda d: d.year))
+month_of = expr_op("month", "month({0})", py_fn=_ng(lambda d: d.month))
 
-identity_op = column_op("identity",
-                        lambda *cs: list(cs) if len(cs) > 1 else cs[0],
-                        py_fn=lambda *vs: vs if len(vs) > 1 else vs[0])
+identity_op = expr_op("identity",
+                      lambda *fs: list(fs) if len(fs) > 1 else fs[0],
+                      py_fn=lambda *vs: vs if len(vs) > 1 else vs[0])
 
 
 def round_to(n: int) -> MapOp:
-    """Factory: round to n decimals (scale must be a Python int for F.round).
+    """Factory: round to n decimals (HALF_UP, Spark ``round``).
     Python mirror uses HALF_UP Decimal quantize on the exact binary double
     (matching Spark's BigDecimal rounding, not Python's banker's round)."""
     import decimal as _dec
@@ -204,7 +228,7 @@ def round_to(n: int) -> MapOp:
         q = _dec.Decimal(1).scaleb(-_n)
         return float(_dec.Decimal(v).quantize(q, rounding=_dec.ROUND_HALF_UP))
 
-    return column_op(f"round{n}", lambda c_: F.round(c_, n), py_fn=_ng(_py))
+    return expr_op(f"round{n}", f"round({{0}}, {int(n)})", py_fn=_ng(_py))
 
 
 def _py_json_get(s: str, path: str):
@@ -236,10 +260,12 @@ def _py_json_get(s: str, path: str):
 
 
 def json_get(path: str) -> MapOp:
-    """Extract a JSON field (F.get_json_object) — the reference has no JSON
-    lib; this is the 'host-language fns' extension point (SURVEY §2.8)."""
-    return column_op("json_get", lambda c_: F.get_json_object(c_, path),
-                     py_fn=_ng(lambda s: _py_json_get(s, path)))
+    """Extract a JSON field (``get_json_object``) — the reference has no
+    JSON lib; this is the 'host-language fns' extension point (SURVEY
+    §2.8)."""
+    return expr_op("json_get", lambda f, _p=sql_lit(path):
+                   f"get_json_object({f}, {_p})",
+                   py_fn=_ng(lambda s: _py_json_get(s, path)))
 
 
 # cast_to dtypes with faithful Python mirrors of Spark's ANSI CAST (the
@@ -281,8 +307,8 @@ def _py_bool_cast(v):
 
 def cast_to(dtype: str) -> MapOp:
     mirror = _PY_CASTS.get(dtype.lower())
-    return column_op(f"cast_{dtype}", lambda c_: c_.cast(dtype),
-                     py_fn=_ng(mirror) if mirror else None)
+    return expr_op(f"cast_{dtype}", lambda f: f"CAST({f} AS {dtype})",
+                   py_fn=_ng(mirror) if mirror else None)
 
 
 def sample(fraction: float, seed=None) -> FilterOp:
@@ -310,43 +336,41 @@ def debug() -> FilterOp:
 # ---------------------------------------------------------------------------
 # aggregators (ops.clj:160-253; ops_impl.clj)
 
-count = ParallelAgg("count", expr_fn=lambda *cs: F.count(F.lit(1)),
-                    pandas_fn=lambda pdf: len(pdf), returns=("bigint",))
-# c/!count — count of non-null values (ops.clj:170): F.count(col) is null-skipping
-count_notnull = ParallelAgg("!count", expr_fn=lambda c: F.count(c),
-                            pandas_fn=lambda pdf: int(pdf.iloc[:, 0].count()),
-                            returns=("bigint",))
-sum_agg = ParallelAgg("sum", expr_fn=lambda c: F.sum(c),
-                      pandas_fn=lambda pdf: pdf.iloc[:, 0].sum())
-min_agg = ParallelAgg("min", expr_fn=lambda c: F.min(c),
-                      pandas_fn=lambda pdf: pdf.iloc[:, 0].min())
-max_agg = ParallelAgg("max", expr_fn=lambda c: F.max(c),
-                      pandas_fn=lambda pdf: pdf.iloc[:, 0].max())
-avg = ParallelAgg("avg", expr_fn=lambda c: F.avg(c),
-                  pandas_fn=lambda pdf: pdf.iloc[:, 0].mean())
-distinct_count = ParallelAgg("distinct-count",
-                             expr_fn=lambda *cs: F.count_distinct(*cs),
-                             pandas_fn=lambda pdf: len(pdf.drop_duplicates()))
-approx_distinct_count = ParallelAgg("approx-distinct-count",
-                                    expr_fn=lambda *cs: F.approx_count_distinct(*cs))
+count = expr_agg("count", lambda *fs: "count(1)",
+                 pandas_fn=lambda pdf: len(pdf), returns=("bigint",))
+# c/!count — count of non-null values (ops.clj:170): count(col) is null-skipping
+count_notnull = expr_agg("!count", "count({0})",
+                         pandas_fn=lambda pdf: int(pdf.iloc[:, 0].count()),
+                         returns=("bigint",))
+sum_agg = expr_agg("sum", "sum({0})",
+                   pandas_fn=lambda pdf: pdf.iloc[:, 0].sum())
+min_agg = expr_agg("min", "min({0})",
+                   pandas_fn=lambda pdf: pdf.iloc[:, 0].min())
+max_agg = expr_agg("max", "max({0})",
+                   pandas_fn=lambda pdf: pdf.iloc[:, 0].max())
+avg = expr_agg("avg", "avg({0})",
+               pandas_fn=lambda pdf: pdf.iloc[:, 0].mean())
+distinct_count = expr_agg(
+    "distinct-count", lambda *fs: f"count(DISTINCT {', '.join(fs)})",
+    pandas_fn=lambda pdf: len(pdf.drop_duplicates()))
+approx_distinct_count = expr_agg("approx-distinct-count",
+                                 "approx_count_distinct({0})")
 # Mergeable distinct-count sketches (Datasketches HLL): build per-batch/
 # partition sketches, store them as binary columns, union across batches
 # later — the incremental-analytics pattern where re-scanning history for
 # each day's distinct-users number is a 100 TB non-starter.
-hll_sketch = ParallelAgg("hll-sketch",
-                         expr_fn=lambda c: F.hll_sketch_agg(c))
-hll_union = ParallelAgg("hll-union",
-                        expr_fn=lambda c: F.hll_union_agg(c))
-hll_estimate = column_op("hll-estimate", F.hll_sketch_estimate)
-collect_list = ParallelAgg("collect-list", expr_fn=lambda c: F.collect_list(c),
-                           pandas_fn=lambda pdf:
-                           [v for v in pdf.iloc[:, 0] if v is not None])
-collect_set = ParallelAgg("collect-set", expr_fn=lambda c: F.collect_set(c),
-                          pandas_fn=lambda pdf: sorted(
-                              {v for v in pdf.iloc[:, 0] if v is not None},
-                              key=repr))
-first_agg = ParallelAgg("first", expr_fn=lambda c: F.first(c, ignorenulls=False),
-                        pandas_fn=lambda pdf: pdf.iloc[0, 0])
+hll_sketch = expr_agg("hll-sketch", "hll_sketch_agg({0})")
+hll_union = expr_agg("hll-union", "hll_union_agg({0})")
+hll_estimate = expr_op("hll-estimate", "hll_sketch_estimate({0})")
+collect_list = expr_agg("collect-list", "collect_list({0})",
+                        pandas_fn=lambda pdf:
+                        [v for v in pdf.iloc[:, 0] if v is not None])
+collect_set = expr_agg("collect-set", "collect_set({0})",
+                       pandas_fn=lambda pdf: sorted(
+                           {v for v in pdf.iloc[:, 0] if v is not None},
+                           key=repr))
+first_agg = expr_agg("first", "first({0}, false)",
+                     pandas_fn=lambda pdf: pdf.iloc[0, 0])
 
 def percentile(p: float) -> ParallelAgg:
     """Exact interpolated percentile aggregator (order statistics beyond
@@ -354,9 +378,9 @@ def percentile(p: float) -> ParallelAgg:
     ``quantile_cont`` ↔ pandas ``quantile(interpolation='linear')``)."""
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"percentile: p must be in [0,1], got {p}")
-    return ParallelAgg(
+    return expr_agg(
         f"percentile-{p}",
-        expr_fn=lambda c: F.percentile(c, F.lit(float(p))),
+        lambda f, _p=sql_lit(float(p)): f"percentile({f}, {_p})",
         pandas_fn=lambda pdf: pdf.iloc[:, 0].quantile(p,
                                                       interpolation="linear"),
         returns=("double",))
@@ -368,7 +392,7 @@ def median() -> ParallelAgg:
 
 def approx_percentile(p: float, accuracy: int = 10_000) -> ParallelAgg:
     """Approximate percentile (Greenwald-Khanna sketch,
-    ``F.percentile_approx``) — the 100 TB path: the sketch merges
+    ``percentile_approx``) — the 100 TB path: the sketch merges
     map-side in O(accuracy) memory per group, where the exact
     ``c.percentile`` must shuffle and sort every value.  Error is bounded
     by ``1/accuracy`` rank fraction.  Approximation is engine-specific, so
@@ -376,23 +400,23 @@ def approx_percentile(p: float, accuracy: int = 10_000) -> ParallelAgg:
     ``c.approx_distinct``); tests bound it against the exact aggregator."""
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"approx_percentile: p must be in [0,1], got {p}")
-    return ParallelAgg(
+    return expr_agg(
         f"approx-percentile-{p}",
-        expr_fn=lambda c: F.percentile_approx(c, F.lit(float(p)),
-                                              F.lit(int(accuracy))),
+        lambda f, _p=sql_lit(float(p)), _a=int(accuracy):
+        f"percentile_approx({f}, {_p}, {_a})",
         returns=("double",))
 
 
 # cascalog-math stats.clj:24-48 (+ Welford 1-pass variance, stats.clj:7-22 —
 # Spark's var_pop/var_samp are already single-pass numerically stable)
-var_pop = ParallelAgg("variance", expr_fn=lambda c: F.var_pop(c),
-                      pandas_fn=lambda pdf: pdf.iloc[:, 0].var(ddof=0))
-var_samp = ParallelAgg("sample-variance", expr_fn=lambda c: F.var_samp(c),
-                       pandas_fn=lambda pdf: pdf.iloc[:, 0].var(ddof=1))
-stddev_pop = ParallelAgg("stddev", expr_fn=lambda c: F.stddev_pop(c),
-                         pandas_fn=lambda pdf: pdf.iloc[:, 0].std(ddof=0))
-stddev_samp = ParallelAgg("sample-stddev", expr_fn=lambda c: F.stddev_samp(c),
-                          pandas_fn=lambda pdf: pdf.iloc[:, 0].std(ddof=1))
+var_pop = expr_agg("variance", "var_pop({0})",
+                   pandas_fn=lambda pdf: pdf.iloc[:, 0].var(ddof=0))
+var_samp = expr_agg("sample-variance", "var_samp({0})",
+                    pandas_fn=lambda pdf: pdf.iloc[:, 0].var(ddof=1))
+stddev_pop = expr_agg("stddev", "stddev_pop({0})",
+                      pandas_fn=lambda pdf: pdf.iloc[:, 0].std(ddof=0))
+stddev_samp = expr_agg("sample-stddev", "stddev_samp({0})",
+                       pandas_fn=lambda pdf: pdf.iloc[:, 0].std(ddof=1))
 
 
 def limit(n: int) -> LimitAgg:
@@ -431,14 +455,19 @@ def fixed_sample_deterministic(n: int, seed: int = 42) -> LimitAgg:
 
 
 # ---------------------------------------------------------------------------
-# operator combinators (ops.clj:14-150).  Column-expression members compose
-# into one Column expression (stays JVM-side); Python-fn members compose
-# into one Python fn (ONE UDF instead of n).  Mixing the two kinds in a
-# single combinator is rejected — a Column fn can't run on Python values
-# nor vice versa; use separate predicates instead.
+# operator combinators (ops.clj:14-150).  SQL-template members compose into
+# one SQL template; Column-expression members (user ``column_op`` s, or a
+# mix with built-ins) compose into one Column expression — both stay
+# JVM-side; Python-fn members compose into one Python fn (ONE UDF instead
+# of n).  Mixing JVM-expression and Python-fn ops in a single combinator is
+# rejected — an expression can't run on Python values nor vice versa; use
+# separate predicates instead.
 
 def _combine_mode(ops, what: str) -> str:
-    if all(getattr(o, "column_fn", None) is not None for o in ops):
+    if all(getattr(o, "sql_template", None) is not None for o in ops):
+        return "sql"
+    if all(getattr(o, "sql_template", None) is not None
+           or getattr(o, "column_fn", None) is not None for o in ops):
         return "column"
     if all(getattr(o, "py_fn", None) is not None for o in ops):
         return "py"
@@ -447,10 +476,35 @@ def _combine_mode(ops, what: str) -> str:
         "one combinator; compose same-kind ops or use separate predicates")
 
 
+def _as_column_fn(op):
+    """Column form of a combinator member.  A SQL-template op renders over
+    its input Columns' SQL text, which the compiler attaches to every input
+    Column it builds (``ops.with_sql``), and so does this to its outputs."""
+    if getattr(op, "column_fn", None) is not None:
+        return op.column_fn
+
+    def column_fn(*cs):
+        frags = []
+        for c in cs:
+            if getattr(c, "__cs_sql__", None) is None:
+                raise ValueError(
+                    f"{op.name}: a built-in op cannot take the output of a "
+                    "Column-expression op inside a combinator; apply them "
+                    "as separate predicates")
+            frags.append(c.__cs_sql__)
+        out = render_sql(op, frags)
+        cols = [with_sql(F.expr(o), f"({o})")
+                for o in (out if isinstance(out, list) else [out])]
+        return cols if isinstance(out, list) else cols[0]
+
+    return column_fn
+
+
 def comp(*ops):
     """Compose map ops right-to-left (c/comp, ops.clj:34-44)."""
     ops = [o for o in ops]
-    if _combine_mode(ops, "comp") == "py":
+    mode = _combine_mode(ops, "comp")
+    if mode == "py":
         def py_fn(*vals):
             vals = list(vals)
             for op in reversed(ops):
@@ -462,11 +516,21 @@ def comp(*ops):
         return MapOp(name="comp", py_fn=py_fn,
                      returns=list(first.returns) or ["string"],
                      n_out=first.n_out)
+    if mode == "sql":
+        def sql_template(*fs):
+            vals = list(fs)
+            for op in reversed(ops):
+                out = render_sql(op, vals)
+                vals = out if isinstance(out, list) else [f"({out})"]
+            return vals if len(vals) > 1 else vals[0]
+
+        return MapOp(name="comp", sql_template=sql_template)
+    fns = [_as_column_fn(o) for o in ops]
 
     def column_fn(*cs):
         vals = list(cs)
-        for op in reversed(ops):
-            out = op.column_fn(*vals)
+        for fn in reversed(fns):
+            out = fn(*vals)
             vals = out if isinstance(out, list) else [out]
         return vals if len(vals) > 1 else vals[0]
 
@@ -475,49 +539,65 @@ def comp(*ops):
 
 def juxt(*ops):
     """Apply n ops to same inputs producing n outputs (c/juxt, ops.clj:46-55)."""
-    if _combine_mode(ops, "juxt") == "py":
+    mode = _combine_mode(ops, "juxt")
+    if mode == "py":
         return MapOp(name="juxt",
                      py_fn=lambda *vals: tuple(op.py_fn(*vals) for op in ops),
                      returns=[
                          (list(op.returns) or ["string"])[0] for op in ops],
                      n_out=len(ops))
-
-    def column_fn(*cs):
-        return [op.column_fn(*cs) for op in ops]
-
-    return MapOp(name="juxt", column_fn=column_fn, n_out=len(ops))
+    if mode == "sql":
+        return MapOp(name="juxt", n_out=len(ops),
+                     sql_template=lambda *fs: [render_sql(op, fs)
+                                               for op in ops])
+    fns = [_as_column_fn(o) for o in ops]
+    return MapOp(name="juxt", column_fn=lambda *cs: [fn(*cs) for fn in fns],
+                 n_out=len(ops))
 
 
 def each(op):
     """Apply a 1-in/1-out op to every input var (c/each, ops.clj:57-70).
-    Column-expression ops only (output arity is the input arity, which a
+    JVM-expression ops only (output arity is the input arity, which a
     Python UDF's fixed return schema can't express)."""
-    if getattr(op, "column_fn", None) is None:
+    if getattr(op, "sql_template", None) is not None:
+        m = MapOp(name=f"each-{op.name}",
+                  sql_template=lambda *fs: [render_sql(op, [f]) for f in fs])
+    elif getattr(op, "column_fn", None) is not None:
+        m = MapOp(name=f"each-{op.name}",
+                  column_fn=lambda *cs: [op.column_fn(c) for c in cs])
+    else:
         raise ValueError(f"each({op.name}): requires a Column-expression op")
-
-    def column_fn(*cs):
-        return [op.column_fn(c) for c in cs]
-
-    m = MapOp(name=f"each-{op.name}", column_fn=column_fn)
     m.dynamic_n_out = True  # type: ignore[attr-defined]
     return m
 
 
 def partial(op, *consts):
     """Partially apply leading args with constants (c/partial, ops.clj:72-84).
-    Preserves the op's kind, return types and arity."""
+    Preserves the op's kind, return types and arity.  A built-in (SQL
+    template) op takes only constants with an exact SQL spelling (None,
+    bool, int, float, str)."""
     import dataclasses
 
+    def bound_sql():
+        lits = [sql_lit(k) for k in consts]
+        return lambda *fs: render_sql(op, [*lits, *fs])
+
     if isinstance(op, ParallelAgg):
+        if op.sql_template is not None:
+            return ParallelAgg(name=f"partial-{op.name}",
+                               sql_template=bound_sql(), n_out=op.n_out,
+                               returns=op.returns)
         return ParallelAgg(
             name=f"partial-{op.name}",
             expr_fn=lambda *cs: op.expr_fn(*[F.lit(k) for k in consts], *cs),
             n_out=op.n_out, returns=op.returns)
     kwargs = {}
+    if getattr(op, "sql_template", None) is not None:
+        kwargs["sql_template"] = bound_sql()
     if op.column_fn is not None:
         cfn = op.column_fn
         kwargs["column_fn"] = \
-            lambda *cs: cfn(*[F.lit(k) for k in consts], *cs)
+            lambda *cs: cfn(*[lit_col(k) for k in consts], *cs)
     if op.py_fn is not None:
         pfn = op.py_fn
         kwargs["py_fn"] = lambda *vals: pfn(*consts, *vals)
@@ -526,6 +606,10 @@ def partial(op, *consts):
 
 def negate(filter_op: FilterOp) -> FilterOp:
     """c/negate (ops.clj:98-107)."""
+    if getattr(filter_op, "sql_template", None) is not None:
+        return FilterOp(
+            name=f"not-{filter_op.name}",
+            sql_template=lambda *fs: f"(NOT {render_sql(filter_op, fs)})")
     if filter_op.column_fn is not None:
         return FilterOp(name=f"not-{filter_op.name}",
                         column_fn=lambda *cs: ~filter_op.column_fn(*cs))
@@ -533,40 +617,41 @@ def negate(filter_op: FilterOp) -> FilterOp:
                     py_fn=lambda *vals: not filter_op.py_fn(*vals))
 
 
-def all_filters(*fops) -> FilterOp:
-    """c/all — conjunction of filters (ops.clj:109-129)."""
-    if _combine_mode(fops, "all_filters") == "py":
-        return FilterOp(name="all",
-                        py_fn=lambda *v: all(f.py_fn(*v) for f in fops))
+def _bool_combine(fops, what: str, name: str, sql_op: str, col_op, py_all):
+    mode = _combine_mode(fops, what)
+    if mode == "py":
+        return FilterOp(name=name,
+                        py_fn=lambda *v: py_all(f.py_fn(*v) for f in fops))
+    if mode == "sql":
+        return FilterOp(name=name, sql_template=lambda *fs: "(" + f" {sql_op} "
+                        .join(render_sql(f, fs) for f in fops) + ")")
+    fns = [_as_column_fn(f) for f in fops]
 
     def column_fn(*cs):
-        acc = fops[0].column_fn(*cs)
-        for f in fops[1:]:
-            acc = acc & f.column_fn(*cs)
+        acc = fns[0](*cs)
+        for fn in fns[1:]:
+            acc = col_op(acc, fn(*cs))
         return acc
 
-    return FilterOp(name="all", column_fn=column_fn)
+    return FilterOp(name=name, column_fn=column_fn)
+
+
+def all_filters(*fops) -> FilterOp:
+    """c/all — conjunction of filters (ops.clj:109-129)."""
+    return _bool_combine(fops, "all_filters", "all", "AND",
+                         lambda a, b: a & b, all)
 
 
 def any_filters(*fops) -> FilterOp:
     """c/any — disjunction of filters (ops.clj:131-150)."""
-    if _combine_mode(fops, "any_filters") == "py":
-        return FilterOp(name="any",
-                        py_fn=lambda *v: any(f.py_fn(*v) for f in fops))
-
-    def column_fn(*cs):
-        acc = fops[0].column_fn(*cs)
-        for f in fops[1:]:
-            acc = acc | f.column_fn(*cs)
-        return acc
-
-    return FilterOp(name="any", column_fn=column_fn)
+    return _bool_combine(fops, "any_filters", "any", "OR",
+                         lambda a, b: a | b, any)
 
 
 # ---------------------------------------------------------------------------
 # auto-lift table for common Python callables used directly as predicates
 # (reference: any Clojure fn is a predicate — predicate.clj:87-98; tests use
-# str, +, *, <, odd? directly.  The Python analogs map to native Column ops.)
+# str, +, *, <, odd? directly.  The Python analogs map to native SQL ops.)
 
 KNOWN_CALLABLES = {
     _pyop.add: add,
@@ -580,21 +665,20 @@ KNOWN_CALLABLES = {
     _pyop.ge: gte,
     _pyop.eq: eq,
     _pyop.ne: ne,
-    str: MapOp(name="str",
-               column_fn=lambda *cs: F.concat(*[c.cast("string") for c in cs]),
-               py_fn=_ng(lambda *vs: "".join(_spark_str(v) for v in vs))),
-    len: column_op("len", F.length, py_fn=_ng(len)),
-    abs: column_op("abs", F.abs, py_fn=_ng(abs)),
+    str: expr_op("str", _concat_sql,
+                 py_fn=_ng(lambda *vs: "".join(_spark_str(v) for v in vs))),
+    len: expr_op("len", "length({0})", py_fn=_ng(len)),
+    abs: expr_op("abs", "abs({0})", py_fn=_ng(abs)),
     # Spark greatest/least skip NULL args (NULL only when ALL are NULL).
     # _pymax/_pymin bind the BUILTINS: the module later rebinds max/min to
     # the c/max / c/min aggregator aliases, which a late global lookup
     # inside the lambda would pick up instead
-    max: column_op("greatest", lambda *cs: F.greatest(*cs),
-                   py_fn=lambda *vs, _pymax=max: _pymax(
-                       (v for v in vs if v is not None), default=None)),
-    min: column_op("least", lambda *cs: F.least(*cs),
-                   py_fn=lambda *vs, _pymin=min: _pymin(
-                       (v for v in vs if v is not None), default=None)),
+    max: expr_op("greatest", _call("greatest"),
+                 py_fn=lambda *vs, _pymax=max: _pymax(
+                     (v for v in vs if v is not None), default=None)),
+    min: expr_op("least", _call("least"),
+                 py_fn=lambda *vs, _pymin=min: _pymin(
+                     (v for v in vs if v is not None), default=None)),
 }
 
 

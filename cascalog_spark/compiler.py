@@ -5,19 +5,30 @@ transformations (the analog of cascading/platform.clj:220-307's
 ``to-generator`` dispatch, with Catalyst replacing Cascading's physical
 planner entirely).
 
+Each planner node becomes one DataFrame step built from SQL expression
+*strings* — ``filter("…")``, ``selectExpr(…)``, ``join(on=[names])``,
+``groupBy(names).agg(F.expr(…))`` — never a chain of PySpark ``Column``
+calls.  Under PySpark 4 every ``Column`` call (``F.col``, ``alias``,
+``eqNullSafe``, ``F.lit``) captures its call site through several py4j round
+trips, which made compiling a small interactive query cost as much as
+running it.  Built-in ops carry SQL templates (``ops.render_sql``); user
+``column_op``/``column_filter``/``defparallelagg`` ops, Python UDFs, traps,
+pickled columns, fan-out persists and pandas/buffer groupings keep their
+``Column`` code and pay that per-call cost.
+
 Physical-design notes for 100 TB scale:
-- Generator constant-filters are applied on the raw scan *before* any select,
-  so they reach parquet as PushedFilters.
-- Known ops emit native Column expressions → whole-stage codegen applies;
-  only user Python fns become (Arrow) UDFs.
+- Generator constant bindings and ``?``-var ``IS NOT NULL`` guards are one
+  filter on the raw scan, so they reach parquet as PushedFilters.
+- Native expressions → whole-stage codegen applies; only user Python fns
+  become (Arrow) UDFs.
 - Joins use ``on=[names]`` equi-join form → Catalyst/AQE picks
   broadcast/sort-merge/shuffle-hash and handles skew; join-key coalescing on
   outer joins (operations.clj:477-484 ``join-fields-selector``) is native to
   Spark's USING-join.
 - Aggregations emit native ``groupBy().agg()`` → map-side partial aggregation
   (the reference's ClojureCombinerBase LRU combiner) is automatic.
-- Per-group top-k (c/limit) compiles to Window+row_number — streaming, no
-  group materialization.
+- Per-group top-k (c/limit) compiles to ``row_number() OVER (…)`` —
+  streaming, no group materialization.
 """
 
 from __future__ import annotations
@@ -34,7 +45,8 @@ import pickle
 from . import vars as V
 from .ops import (BufferIterOp, BufferOp, FilterOp, LimitAgg, MapcatOp,
                   MapOp, ParallelAgg, ParallelBufOp, PyObjectType,
-                  SequentialAgg)
+                  SequentialAgg, lit_col, render_sql, sql_lit,
+                  sql_quote, with_sql)
 from .planner import (ApplicationNode, EqualityFilterNode, ExistenceJoinNode,
                       FilterNode, GeneratorNode, GroupingNode, JoinNode,
                       MergeNode, Node, ProjectionNode, UniqueNode)
@@ -106,6 +118,7 @@ class Compiler:
         # heterogeneous raw-collection columns and ``returns="object"`` op
         # outputs.  Python-op inputs on these are transparently unpickled.
         self.pickled_cols: set[str] = set()
+        self._n_lits = 0  # temporary F.lit columns (see _sql_args)
 
     # -- entry ---------------------------------------------------------------
 
@@ -155,7 +168,8 @@ class Compiler:
             return
         if isinstance(node, EqualityFilterNode) or (
                 isinstance(node, FilterNode)
-                and getattr(node.op, "column_fn", None) is not None):
+                and (node.op.sql_template is not None
+                     or node.op.column_fn is not None)):
             self._collect_pushdown_occs(node.source, occs, seen_nodes,
                                         seen_srcs, chain + [node])
             return
@@ -207,7 +221,7 @@ class Compiler:
                        for c in colrefs)
 
         def ref(colref):
-            return F.col(phys(colref))
+            return with_sql(F.col(phys(colref)), _src_ref(phys(colref)))
 
         disj = None
         for gen, chain in occ_list:
@@ -235,9 +249,17 @@ class Compiler:
                 if not all((not V.is_var(f)) or
                            (f in cb and usable(cb[f])) for f in infs):
                     continue
-                args = [ref(cb[f]) if V.is_var(f) else F.lit(f)
-                        for f in infs]
-                pred = fnode.op.column_fn(*args)
+                if fnode.op.sql_template is not None:
+                    try:
+                        pred = F.expr(render_sql(fnode.op, [
+                            _src_ref(phys(cb[f])) if V.is_var(f)
+                            else sql_lit(f) for f in infs]))
+                    except TypeError:  # constant with no SQL spelling
+                        continue
+                else:
+                    pred = fnode.op.column_fn(*[
+                        ref(cb[f]) if V.is_var(f) else lit_col(f)
+                        for f in infs])
                 if self._col_deterministic(df, pred):
                     conj.append(pred)
             if not conj:
@@ -277,9 +299,8 @@ class Compiler:
         out.__cs_orig_cols__ = src_cols
         return out
 
-    def compile(self, node: Node) -> DataFrame:
-        """Memoized walk (reference: zip.clj:47-59 visited-map keyed on node
-        identifier — a subquery referenced twice compiles once)."""
+    def _census(self, node: Node) -> None:
+        """Fan-out census of the whole plan, once per compiler."""
         if self._src_counts is None:
             self._src_counts = {}
             self._count_subquery_sources(node, self._src_counts, set())
@@ -288,6 +309,25 @@ class Compiler:
                 self._pushdown_occs = {}
                 self._collect_pushdown_occs(node, self._pushdown_occs,
                                             set(), set(), [])
+
+    def compile_output(self, node: Node, names: list[str]):
+        """Compile a query plan with its output columns named ``names``.
+        The root projection and the rename are one ``selectExpr``.
+        Returns ``(frame, output positions holding pickled objects)``."""
+        self._census(node)
+        if isinstance(node, ProjectionNode):
+            df = self._compile_ProjectionNode(node, names)
+            cols = [self.namer.col(f) for f in node.fields]
+        else:
+            df = self.compile(node)
+            cols = df.columns
+            df = df.toDF(*names)
+        return df, [i for i, c in enumerate(cols) if c in self.pickled_cols]
+
+    def compile(self, node: Node) -> DataFrame:
+        """Memoized walk (reference: zip.clj:47-59 visited-map keyed on node
+        identifier — a subquery referenced twice compiles once)."""
+        self._census(node)
         df = self._memo.get(node.node_id)
         if df is None:
             df = self._dispatch(node)
@@ -302,13 +342,35 @@ class Compiler:
 
     # -- helpers -------------------------------------------------------------
 
-    def _c(self, var: str):
-        return F.col(self.namer.col(var))
+    def _q(self, var: str) -> str:
+        """A var's physical column, quoted for SQL text."""
+        return sql_quote(self.namer.col(var))
 
     def _arg_cols(self, infields):
         """vars → Columns; constants → literals (operations.clj:684-707
-        ``with-constants``)."""
-        return [self._c(f) if V.is_var(f) else F.lit(f) for f in infields]
+        ``with-constants``), for user Column ops."""
+        return [with_sql(F.col(self.namer.col(f)), self._q(f))
+                if V.is_var(f) else lit_col(f) for f in infields]
+
+    def _sql_args(self, df: DataFrame, infields):
+        """vars → quoted columns; constants → SQL literals.  A constant with
+        no exact SQL spelling (date, Decimal, …) is bound as a temporary
+        ``F.lit`` column so it keeps ``F.lit``'s type.  Returns
+        ``(df, fragments, temporary column names)``."""
+        frags, tmps = [], []
+        for f in infields:
+            if V.is_var(f):
+                frags.append(self._q(f))
+                continue
+            try:
+                frags.append(sql_lit(f))
+            except TypeError:
+                name = f"__lit{self._n_lits}"
+                self._n_lits += 1
+                df = df.withColumn(name, F.lit(f))
+                tmps.append(name)
+                frags.append(sql_quote(name))
+        return df, frags, tmps
 
     def _py_io_wrap(self, fn, op, infields):
         """Pickled-object boundary for a Python op: unpickle flagged input
@@ -351,9 +413,13 @@ class Compiler:
                 self.pickled_cols.add(name)
 
     def _null_filter(self, df: DataFrame, fields) -> DataFrame:
-        """FilterNull of non-nullable ``?``-vars (operations.clj:716-722)."""
-        subset = [self.namer.col(f) for f in fields if V.is_non_nullable(f)]
-        return df.na.drop(subset=subset) if subset else df
+        """FilterNull of non-nullable ``?``-vars (operations.clj:716-722):
+        one ``IS NOT NULL`` conjunct per var, which Catalyst pushes into
+        scans and join inputs (``na.drop`` compiles to an opaque
+        ``atleastnnonnulls``)."""
+        conds = [f"{self._q(f)} IS NOT NULL" for f in fields
+                 if V.is_non_nullable(f)]
+        return df.filter(" AND ".join(conds)) if conds else df
 
     def _source_df(self, source: Any) -> DataFrame:
         if isinstance(source, DataFrame):
@@ -448,55 +514,66 @@ class Compiler:
 
     def _compile_GeneratorNode(self, node: GeneratorNode) -> DataFrame:
         df = self._source_df(node.source)
-        # a column-pruned fan-out persist records its pre-prune layout;
-        # positional bindings resolve against THAT order, by name
-        src_cols = getattr(df, "__cs_orig_cols__", None) or df.columns
+        src_cols = None
+
+        def phys(colref):
+            # a column-pruned fan-out persist records its pre-prune layout;
+            # positional bindings resolve against THAT order, by name
+            nonlocal src_cols
+            if not isinstance(colref, int):
+                return colref
+            if src_cols is None:
+                src_cols = getattr(df, "__cs_orig_cols__", None) or df.columns
+            return src_cols[colref]
+
+        cb = {v: phys(colref) for v, colref in node.col_bindings.items()}
         src_pickled = getattr(df, "__cs_pickled__", set())
-        if src_pickled:
-            for v, colref in node.col_bindings.items():
-                phys = src_cols[colref] if isinstance(colref, int) else colref
-                if phys in src_pickled:
-                    self.pickled_cols.add(self.namer.col(v))
+        for v, p in cb.items():
+            if p in src_pickled:
+                self.pickled_cols.add(self.namer.col(v))
 
-        def ref_col(colref):
-            return F.col(src_cols[colref]) if isinstance(colref, int) \
-                else F.col(colref)
-
-        # constant filters on raw scan → parquet PushedFilters
+        # constant bindings, implicit equalities from duplicate vars
+        # (parse.clj:308-336) and ?-var guards: one filter on the raw scan
+        # → parquet PushedFilters
+        conds = []
         for colref, const in node.const_filters:
-            c = ref_col(colref)
-            df = df.filter(c.isNull() if const is None else c.eqNullSafe(F.lit(const)))
-
-        sel = [ref_col(node.col_bindings[v]).alias(self.namer.col(v))
-               for v in node.fields]
-        extras = [v for v in node.col_bindings if v not in node.fields]
-        sel += [ref_col(node.col_bindings[v]).alias(self.namer.col(v))
-                for v in extras]
-        df = df.select(*sel)
-
-        # implicit equality from duplicate vars (parse.clj:308-336)
-        for kept, extra in node.dup_filters:
-            df = df.filter(self._c(kept).eqNullSafe(self._c(extra)))
-        if extras:
-            df = df.drop(*[self.namer.col(v) for v in extras])
-        return self._null_filter(df, node.fields)
+            p = phys(colref)
+            try:
+                conds.append(f"{_src_ref(p)} IS NULL" if const is None
+                             else f"{_src_ref(p)} <=> {sql_lit(const)}")
+            except TypeError:  # no exact SQL spelling: keep F.lit typing
+                df = df.filter(F.col(p).eqNullSafe(F.lit(const)))
+        conds += [f"{_src_ref(cb[kept])} <=> {_src_ref(cb[extra])}"
+                  for kept, extra in node.dup_filters]
+        conds += [f"{_src_ref(cb[v])} IS NOT NULL" for v in node.fields
+                  if V.is_non_nullable(v)]
+        if conds:
+            df = df.filter(" AND ".join(conds))
+        return df.selectExpr(*[f"{_src_ref(cb[v])} AS {self._q(v)}"
+                               for v in node.fields])
 
     def _compile_ApplicationNode(self, node: ApplicationNode) -> DataFrame:
         df = self.compile(node.source)
         op, outs = node.op, node.outfields
         out_cols = [self.namer.col(o) for o in outs]
-        args = self._arg_cols(node.infields)
 
-        tmpl = getattr(op, "sql_template", None)
-        if tmpl is not None:
-            # expr_op: SQL template over the physical column names / SQL
-            # literals — full Catalyst optimization, zero Python at runtime
-            frags = [f"`{self.namer.col(f)}`" if V.is_var(f) else _sql_lit(f)
-                     for f in node.infields]
-            if len(outs) != 1:
-                raise ValueError(f"expr_op {op.name} emits exactly 1 output")
-            df = df.withColumn(out_cols[0], F.expr(tmpl.format(*frags)))
+        if isinstance(op, MapOp) and op.sql_template is not None:
+            # SQL template over the physical column names / SQL literals:
+            # one selectExpr, zero Python at runtime
+            df, frags, tmps = self._sql_args(df, node.infields)
+            res = render_sql(op, frags)
+            res = res if isinstance(res, list) else [res]
+            if len(res) != len(outs):
+                raise ValueError(
+                    f"op {op.name} produced {len(res)} columns for "
+                    f"{len(outs)} output vars")
+            df = df.selectExpr("*", *[f"{e} AS {sql_quote(c)}"
+                                      for e, c in zip(res, out_cols)])
+            if tmps:
+                df = df.drop(*tmps)
             return self._null_filter(df, outs)
+        args = [] if getattr(op, "sql_template", None) is not None \
+            else self._arg_cols(node.infields)
         if isinstance(op, MapOp):
             if op.column_fn is not None:
                 res = op.column_fn(*args)
@@ -584,14 +661,21 @@ class Compiler:
         from .functions.util import explode_fast
 
         tmp = "__mc"
-        if op.column_fn is not None:
-            arr = op.column_fn(*args)
+        if op.column_fn is not None or op.sql_template is not None:
+            tmps = []
+            if op.sql_template is not None:
+                df, frags, tmps = self._sql_args(df, infields)
+                arr = F.expr(render_sql(op, frags))
+            else:
+                arr = op.column_fn(*args)
             if len(out_cols) == 1:
-                return explode_fast(df, arr, out_cols[0])
-            df = explode_fast(df, arr, tmp)
-            for i, name in enumerate(out_cols):
-                df = df.withColumn(name, F.col(tmp).getField(f"_{i}"))
-            return df.drop(tmp)
+                df = explode_fast(df, arr, out_cols[0])
+            else:
+                df = explode_fast(df, arr, tmp)
+                for i, name in enumerate(out_cols):
+                    df = df.withColumn(name, F.col(tmp).getField(f"_{i}"))
+                tmps.append(tmp)
+            return df.drop(*tmps) if tmps else df
         # python fn → Arrow-batched array<...> UDF + explode
         fn, out_flags = self._py_io_wrap(op.py_fn, op, infields)
         self._mark_object_outs(out_cols, out_flags)
@@ -611,6 +695,10 @@ class Compiler:
     def _compile_FilterNode(self, node: FilterNode) -> DataFrame:
         df = self.compile(node.source)
         op: FilterOp = node.op
+        if getattr(op, "sql_template", None) is not None:
+            df, frags, tmps = self._sql_args(df, node.infields)
+            df = df.filter(render_sql(op, frags))
+            return df.drop(*tmps) if tmps else df
         args = self._arg_cols(node.infields)
         if op.column_fn is not None:
             return df.filter(op.column_fn(*args))
@@ -645,13 +733,12 @@ class Compiler:
 
     def _compile_EqualityFilterNode(self, node: EqualityFilterNode) -> DataFrame:
         df = self.compile(node.source)
-        rcol = self.namer.col(node.right)
-        return df.filter(self._c(node.left).eqNullSafe(self._c(node.right))) \
-                 .drop(rcol)
+        return df.filter(f"{self._q(node.left)} <=> {self._q(node.right)}") \
+                 .drop(self.namer.col(node.right))
 
     def _compile_JoinNode(self, node: JoinNode) -> DataFrame:
-        left = self.compile(node.left).alias(f"L_{node.node_id[:8]}")
-        right = self.compile(node.right).alias(f"R_{node.node_id[:8]}")
+        left = self.compile(node.left)
+        right = self.compile(node.right)
         if not node.join_fields:
             # cross-join (api.clj:63-64 idiom)
             return left.crossJoin(right)
@@ -663,28 +750,49 @@ class Compiler:
     def _compile_ExistenceJoinNode(self, node: ExistenceJoinNode) -> DataFrame:
         df = self.compile(node.source)
         sub = self.compile(node.sub)
+        # the subquery's columns are exactly its join fields
         on = [self.namer.col(f) for f in node.join_fields]
-        sub_keys = sub.select(*on).dropDuplicates()
-        if node.mode == "semi":
-            return df.join(sub_keys, on=on, how="left_semi")
-        if node.mode == "anti":
-            return df.join(sub_keys, on=on, how="left_anti")
-        flag_col = self.namer.col(node.flag_var)
-        flagged = sub_keys.withColumn(flag_col, F.lit(True))
+        if node.mode in ("semi", "anti"):
+            # a left-semi/anti join never multiplies left rows, so the
+            # subquery keys need no dedup (it cost a shuffle and a job)
+            return df.join(sub, on=on, how=f"left_{node.mode}")
+        flag = sql_quote(self.namer.col(node.flag_var))
+        flagged = sub.selectExpr("*", f"true AS {flag}").dropDuplicates()
         out = df.join(flagged, on=on, how="left")
-        return out.withColumn(flag_col, F.coalesce(F.col(flag_col), F.lit(False)))
+        return out.withColumn(self.namer.col(node.flag_var),
+                              F.expr(f"coalesce({flag}, false)"))
 
     def _compile_UniqueNode(self, node: UniqueNode) -> DataFrame:
         df = self.compile(node.source)
-        cols = [self.namer.col(f) for f in node.fields]
         # distinct via groupBy-all ≈ FastFirst.java:30-41; Spark's
         # dropDuplicates is the same plan with partial aggregation
-        return df.select(*cols).dropDuplicates()
+        return df.selectExpr(*[self._q(f) for f in node.fields]) \
+                 .dropDuplicates()
 
-    def _compile_ProjectionNode(self, node: ProjectionNode) -> DataFrame:
-        df = self.compile(node.source)
-        df = self._null_filter(df, node.fields)
-        return df.select(*[self.namer.col(f) for f in node.fields])
+    def _compile_ProjectionNode(self, node: ProjectionNode,
+                                names: list[str] | None = None) -> DataFrame:
+        src = node.source
+        # a distinct over the same fields folds into this step
+        unique = isinstance(src, UniqueNode) and src.fields == node.fields
+        df = self._guarded(src.source if unique else src, node.fields)
+        cols = [self.namer.col(f) for f in node.fields]
+        if (names is None or names == cols) and \
+                isinstance(src, GroupingNode) and \
+                node.fields == src.group_fields + [
+                    o for a in src.aggs for o in a.outfields] and \
+                not _hybrid(src.aggs):
+            return df  # the grouping already emits exactly these columns
+        df = df.selectExpr(*[
+            sql_quote(c) if n is None or n == c
+            else f"{sql_quote(c)} AS {sql_quote(n)}"
+            for c, n in zip(cols, names or [None] * len(cols))])
+        return df.dropDuplicates() if unique else df
+
+    def _guarded(self, node: Node, fields) -> DataFrame:
+        """The node's frame with ``fields``' ``?``-var guard, which is left
+        out where the vars' own guards still hold."""
+        df = self.compile(node)
+        return df if _guards_hold(node) else self._null_filter(df, fields)
 
     def _compile_MergeNode(self, node: MergeNode) -> DataFrame:
         dfs = [self.compile(s) for s in node.sources]
@@ -696,9 +804,19 @@ class Compiler:
     # -- grouping ------------------------------------------------------------
 
     def _compile_GroupingNode(self, node: GroupingNode) -> DataFrame:
-        df = self.compile(node.source)
         group_cols = [self.namer.col(f) for f in node.group_fields]
         aggs = node.aggs
+        expr_aggs = [a for a in aggs if _expr_agg(a.op)]
+        src = node.source
+        if isinstance(src, ProjectionNode) and not node.reducers and (
+                len(expr_aggs) == len(aggs) or (
+                    group_cols and len(aggs) == 1
+                    and isinstance(aggs[0].op, LimitAgg))):
+            # a native aggregate or per-group window step selects its own
+            # columns: the pre-grouping projection reduces to its guard
+            df = self._guarded(src.source, src.fields)
+        else:
+            df = self.compile(src)
 
         # :reducers (operations.clj:220-233): hash-partition on the group
         # keys at the requested width before aggregating; native partial
@@ -712,8 +830,6 @@ class Compiler:
             return self._compile_parallel_buf(df, node, aggs[0])
         if len(aggs) == 1 and isinstance(aggs[0].op, BufferIterOp):
             return self._compile_buffer_iter(df, node, aggs[0])
-        expr_aggs = [a for a in aggs
-                     if isinstance(a.op, ParallelAgg) and a.op.expr_fn is not None]
         py_aggs = [a for a in aggs if a not in expr_aggs]
         if not py_aggs:
             return self._native_agg(df, group_cols, expr_aggs)
@@ -741,52 +857,44 @@ class Compiler:
         return native.join(pand, cond, "inner").select(*out_cols)
 
     def _native_agg(self, df, group_cols, aggs) -> DataFrame:
-        exprs = []
+        exprs = []  # SQL text for built-ins, Columns for user expr_fns
         for a in aggs:
-            cols = self._arg_cols(a.infields)
-            res = a.op.expr_fn(*cols)
+            outs = [self.namer.col(o) for o in a.outfields]
+            if a.op.sql_template is not None:
+                df, frags, _tmps = self._sql_args(df, a.infields)
+                res = render_sql(a.op, frags)
+                res = res if isinstance(res, list) else [res]
+                exprs += [f"{e} AS {sql_quote(o)}" for e, o in zip(res, outs)]
+                continue
+            res = a.op.expr_fn(*self._arg_cols(a.infields))
             res = res if isinstance(res, list) else [res]
-            for c, o in zip(res, a.outfields):
-                exprs.append(c.alias(self.namer.col(o)))
+            exprs += [c.alias(o) for c, o in zip(res, outs)]
+        if not group_cols and all(isinstance(e, str) for e in exprs):
+            return df.selectExpr(*exprs)  # a global aggregate
+        exprs = [F.expr(e) if isinstance(e, str) else e for e in exprs]
         if group_cols:
             return df.groupBy(*group_cols).agg(*exprs)
         return df.agg(*exprs)
 
     def _compile_limit(self, df, node: GroupingNode, rp) -> DataFrame:
-        """c/limit & c/limit-rank & c/fixed-sample → Window + row_number
-        (ops.clj:172-269).  Streaming top-k: survives huge groups."""
+        """c/limit & c/limit-rank & c/fixed-sample → ``row_number()``
+        window (ops.clj:172-269).  Streaming top-k: survives huge groups."""
         op: LimitAgg = rp.op
-        group_cols = [self.namer.col(f) for f in node.group_fields]
+        groups = [self._q(f) for f in node.group_fields]
         if op.random and op.deterministic:
             # content-derived uniform key: md5(values ++ seed).  Reproducible
             # across engines/retries (DuckDB spells it identically), unlike
             # rand(), which re-draws per task attempt.
-            key = F.concat_ws(
-                "_", *[self._c(i).cast("string") for i in rp.infields],
-                F.lit(str(op.seed)))
-            order = [F.md5(key)]
+            key = [f"CAST({self._q(i)} AS STRING)" for i in rp.infields]
+            order = [(f"md5(concat_ws('_', {', '.join(key)}, "
+                      f"{sql_lit(str(op.seed))}))", False)]
         elif op.random:
-            order = [F.rand(op.seed) if op.seed is not None else F.rand()]
+            order = [("rand()" if op.seed is None
+                      else f"rand({int(op.seed)})", False)]
         elif node.sort:
-            order = [self._c(s).desc() if node.reverse else self._c(s).asc()
-                     for s in node.sort]
+            order = [(self._q(s), node.reverse) for s in node.sort]
         else:
-            order = [F.monotonically_increasing_id()]
-        rn = "__rn"
-        if group_cols:
-            w = Window.partitionBy(*group_cols).orderBy(*order)
-            df = df.withColumn(rn, F.row_number().over(w)) \
-                   .filter(F.col(rn) <= op.n)
-        else:
-            # GLOBAL top-k: orderBy+limit → TakeOrderedAndProject
-            # (per-partition heaps) — a partitionBy(lit(1)) window would
-            # funnel the whole dataset through ONE task at scale
-            df = df.orderBy(*order).limit(op.n)
-            if op.with_rank:
-                # rank over ≤ n rows only — the single-partition window
-                # is now bounded by k, not by the data
-                df = df.withColumn(
-                    rn, F.row_number().over(Window.orderBy(*order)))
+            order = [("monotonically_increasing_id()", False)]
         invars = rp.infields
         outs = list(rp.outfields)
         rank_var = None
@@ -794,11 +902,30 @@ class Compiler:
             rank_var, outs = outs[-1], outs[:-1]
         if len(invars) != len(outs):
             raise ValueError(f"{op.name}: {len(invars)} inputs vs {len(outs)} outputs")
-        sel = group_cols + [self._c(i).alias(self.namer.col(o))
-                            for i, o in zip(invars, outs)]
+        sel = groups + [f"{self._q(i)} AS {self._q(o)}"
+                        for i, o in zip(invars, outs)]
+        rn = self._q(rank_var) if rank_var else "`__rn`"
+        if groups:
+            order_sql = ", ".join(f"{e} {'DESC' if desc else 'ASC'}"
+                                  for e, desc in order)
+            df = df.selectExpr(*sel, f"row_number() OVER (PARTITION BY "
+                                     f"{', '.join(groups)} ORDER BY "
+                                     f"{order_sql}) AS {rn}") \
+                   .filter(f"{rn} <= {int(op.n)}")
+            return df if rank_var else df.drop("__rn")
+        # GLOBAL top-k: orderBy+limit → TakeOrderedAndProject
+        # (per-partition heaps) — a partitionBy(lit(1)) window would
+        # funnel the whole dataset through ONE task at scale
+        cols = [F.expr(e).desc() if desc else F.expr(e).asc()
+                for e, desc in order]
+        df = df.orderBy(*cols).limit(op.n)
         if rank_var:
-            sel.append(F.col(rn).alias(self.namer.col(rank_var)))
-        return df.select(*sel)
+            # rank over ≤ n rows only — the single-partition window
+            # is now bounded by k, not by the data
+            df = df.withColumn("__rn",
+                               F.row_number().over(Window.orderBy(*cols)))
+            sel.append(f"`__rn` AS {rn}")
+        return df.selectExpr(*sel)
 
     def _compile_parallel_buf(self, df, node: GroupingNode, rp) -> DataFrame:
         """General ParallelBuffer (defparallelbuf, logic/def.clj:109-135;
@@ -1232,13 +1359,39 @@ def _ddl(t: str) -> T.DataType:
     return T.StructType.fromDDL(f"x {t}")[0].dataType
 
 
-def _sql_lit(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    raise TypeError(f"unsupported SQL literal for expr_op: {v!r}")
+def _expr_agg(op) -> bool:
+    """A ParallelAgg with a native aggregate expression."""
+    return isinstance(op, ParallelAgg) and (
+        op.expr_fn is not None or op.sql_template is not None)
+
+
+def _guards_hold(node: Node) -> bool:
+    """Every ``?``-var column of the node's output is non-null already: its
+    generator or op filtered it, and no outer join or aggregate since could
+    have nulled it."""
+    if isinstance(node, (GeneratorNode, ProjectionNode)):
+        return True
+    if isinstance(node, GroupingNode):
+        return False
+    if isinstance(node, JoinNode):
+        return node.how == "inner" and _guards_hold(node.left) \
+            and _guards_hold(node.right)
+    if isinstance(node, MergeNode):
+        return all(_guards_hold(s) for s in node.sources)
+    return _guards_hold(node.source)
+
+
+def _hybrid(aggs) -> bool:
+    """Native and Python aggs mixed: the grouping emits the native
+    outputs first (see ``_compile_GroupingNode``)."""
+    return 0 < sum(_expr_agg(a.op) for a in aggs) < len(aggs)
+
+
+def _src_ref(name: str) -> str:
+    """SQL reference to a source column, read the way ``F.col`` reads it:
+    dots select struct fields, backticks quote."""
+    if "`" in name:
+        return name
+    return ".".join(sql_quote(p) for p in name.split("."))
+
+

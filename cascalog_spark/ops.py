@@ -5,10 +5,19 @@ Reference: cascalog-core/src/clj/cascalog/logic/def.clj:19-41 attaches
 type metadata to ops; predicate.clj:160-217 lifts arbitrary host-language
 callables into predicates.
 
-Spark-first design decision (SURVEY.md §4): every op carries, when possible, a
-``column_fn`` that builds a native Catalyst ``Column`` expression from input
-Columns — this keeps predicate pushdown / codegen / pruning applicable.  Only
-user Python functions fall back to (Arrow-vectorized pandas) UDFs.
+Spark-first design decision (SURVEY.md §4): every op the engine can express
+natively stays a Catalyst expression, so predicate pushdown, codegen and
+pruning apply; only user Python functions fall back to Arrow UDFs.  Native
+ops come in two forms:
+
+- ``sql_template``: a SQL expression over the inputs' SQL fragments (quoted
+  column names, literals).  Every built-in op in ``builtin.py`` is one.  The
+  compiler splices templates into one ``filter``/``selectExpr``/``agg`` step
+  per planner node, with no PySpark ``Column`` built on the driver.
+- ``column_fn``: a user function from input ``Column`` s to a ``Column``
+  (``column_op``/``column_filter``/``defparallelagg``).  Each PySpark
+  ``Column`` call pays the session's call-site capture, a few py4j round
+  trips per call, so these cost more to compile than templates.
 """
 
 from __future__ import annotations
@@ -67,6 +76,65 @@ def parse_type(t) -> T.DataType:
 
 
 # ---------------------------------------------------------------------------
+# SQL fragments
+
+
+def sql_quote(name: str) -> str:
+    """Backtick-quote one identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_lit(v) -> str:
+    """SQL spelling of a constant with the type ``F.lit`` gives it.
+
+    Raises TypeError for a constant it cannot spell exactly (dates,
+    timestamps, Decimals, bytes, NumPy integers, ints beyond 64 bits): the
+    compiler binds those through ``F.lit`` instead."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if type(v) is int and -(1 << 63) <= v < (1 << 63):
+        return f"({v})" if v < 0 else str(v)
+    if isinstance(v, float):
+        v = float(v)  # NumPy float64 subclasses float but reprs differently
+        if v != v:
+            return "CAST('NaN' AS DOUBLE)"
+        if v in (float("inf"), float("-inf")):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        # a bare 0.1 parses as DECIMAL(1,1); the D suffix makes it a double
+        r = repr(v)
+        return f"({r}D)" if r.startswith("-") else f"{r}D"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no exact SQL literal for {v!r}")
+
+
+def with_sql(col, sql: str):
+    """Attach a Column's SQL text as ``__cs_sql__``: a built-in op inside a
+    combinator with user Column ops renders over it
+    (``builtin._as_column_fn``)."""
+    col.__cs_sql__ = sql
+    return col
+
+
+def lit_col(v):
+    """``F.lit(v)``, with its SQL spelling attached when it has one."""
+    try:
+        return with_sql(F.lit(v), sql_lit(v))
+    except TypeError:
+        return F.lit(v)
+
+
+def render_sql(op, frags):
+    """Apply an op's ``sql_template`` to its inputs' SQL fragments: a
+    format string (``{0}``, ``{1}`` …) or a callable over the fragments.
+    Returns one SQL string, or a list of them for multi-output ops."""
+    t = op.sql_template
+    return t(*frags) if callable(t) else t.format(*frags)
+
+
+# ---------------------------------------------------------------------------
 # op base classes
 
 
@@ -85,7 +153,8 @@ class MapOp(Op):
 
     Reference: ``defmapfn`` (logic/def.clj:28,36,66-68), ``map*``
     (cascading/operations.clj:131-134).
-    Spark: native Column expr when ``column_fn`` given, else pandas/py UDF.
+    Spark: native expression when ``sql_template`` or ``column_fn`` is
+    given, else an Arrow UDF over ``py_fn``.
     """
 
     name: str
@@ -94,6 +163,7 @@ class MapOp(Op):
     returns: Sequence[Any] = ()  # Spark types of outputs (for py_fn path)
     n_out: int = 1
     vectorized: bool = False  # py_fn takes/returns pandas Series
+    sql_template: Any = None  # str | (*sql frags) -> str | [str]
 
     def __call__(self, *args, **kwargs):
         if self.py_fn is not None:
@@ -115,6 +185,7 @@ class MapcatOp(Op):
     py_fn: Optional[Callable[..., Any]] = None
     returns: Sequence[Any] = ()
     n_out: int = 1
+    sql_template: Any = None  # SQL array expression, exploded like column_fn
 
     def __call__(self, *args, **kwargs):
         if self.py_fn is not None:
@@ -134,6 +205,7 @@ class FilterOp(Op):
     name: str
     column_fn: Optional[Callable[..., Any]] = None  # (*Column) -> bool Column
     py_fn: Optional[Callable[..., Any]] = None
+    sql_template: Any = None  # boolean SQL expression
 
     def __call__(self, *args, **kwargs):
         if self.py_fn is not None:
@@ -157,6 +229,7 @@ class ParallelAgg(Op):
     # pandas fallback so this agg can participate in a mixed pandas grouping:
     pandas_fn: Optional[Callable[..., Any]] = None  # (pdf cols) -> scalar
     returns: Sequence[Any] = ("double",)  # types for the pandas fallback path
+    sql_template: Any = None  # SQL aggregate expression (built-ins)
 
 
 @dataclass(repr=False)
@@ -438,9 +511,12 @@ def mapcatfn(fn, returns="string", n_out=1, name=None):
 def column_op(name: str, column_fn, n_out: int = 1, py_fn=None) -> MapOp:
     """Wrap a Column-expression builder as a map op (native, Catalyst-visible).
 
-    ``py_fn`` is an optional scalar Python MIRROR of the same semantics for
-    the in-memory platform (exec_local) — the Spark compiler always prefers
-    ``column_fn``, so the mirror never affects cluster plans."""
+    The compiler calls ``column_fn`` on PySpark ``Column`` s, and every
+    ``Column`` call pays PySpark's per-call call-site capture (a few py4j
+    round trips); ``expr_op`` compiles cheaper.  ``py_fn`` is an optional
+    scalar Python MIRROR of the same semantics for the in-memory platform
+    (exec_local) — the Spark compiler always prefers ``column_fn``, so the
+    mirror never affects cluster plans."""
     return MapOp(name=name, column_fn=column_fn, n_out=n_out, py_fn=py_fn)
 
 
@@ -448,15 +524,29 @@ def column_filter(name: str, column_fn, py_fn=None) -> FilterOp:
     return FilterOp(name=name, column_fn=column_fn, py_fn=py_fn)
 
 
-def expr_op(name: str, template: str, n_out: int = 1) -> MapOp:
-    """Op from a SQL expression template: ``{0}``, ``{1}`` … are input columns.
+def expr_op(name: str, template, n_out: int = 1, py_fn=None) -> MapOp:
+    """Op from a SQL expression template: ``{0}``, ``{1}`` … are the inputs'
+    SQL fragments (quoted column names or literals).  ``template`` may also
+    be a callable over the fragments returning one SQL string, or a list of
+    ``n_out`` strings.  This is how the built-in ops are written: the
+    compiler splices the text into the node's one ``selectExpr``/``filter``
+    step, with no PySpark ``Column`` built per call.
 
     Example: ``expr_op("tax", "{0} * (1 + {1})")``.
     """
+    return MapOp(name=name, sql_template=template, n_out=n_out, py_fn=py_fn)
 
-    op = MapOp(name=name, n_out=n_out)
-    op.sql_template = template  # resolved by the compiler against the
-    return op                   # physical column names (ApplicationNode)
+
+def expr_filter(name: str, template, py_fn=None) -> FilterOp:
+    """Filter from a boolean SQL expression template (see ``expr_op``)."""
+    return FilterOp(name=name, sql_template=template, py_fn=py_fn)
+
+
+def expr_agg(name: str, template, pandas_fn=None,
+             returns=("double",)) -> ParallelAgg:
+    """Aggregator from a SQL aggregate template, e.g. ``"sum({0})"``."""
+    return ParallelAgg(name=name, sql_template=template, pandas_fn=pandas_fn,
+                       returns=returns)
 
 
 # ---------------------------------------------------------------------------

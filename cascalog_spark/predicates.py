@@ -20,7 +20,8 @@ from typing import Any, Optional
 
 from . import vars as V
 from .ops import (BufferIterOp, BufferOp, FilterOp, LimitAgg, MapcatOp,
-                  MapOp, ParallelAgg, ParallelBufOp, SequentialAgg, lift)
+                  MapOp, ParallelAgg, ParallelBufOp, SequentialAgg, lift,
+                  render_sql)
 
 OUT = ":>"
 IN = ":<"
@@ -276,6 +277,7 @@ def normalize_predicate(pred, fresh_filters: list) -> RawPredicate:
         # column instead of filtering
         from .ops import parse_type
         bool_op = MapOp(name=f"{op.name}-value", column_fn=op.column_fn,
+                        sql_template=op.sql_template,
                         py_fn=op.py_fn, returns=[parse_type("boolean")],
                         n_out=1)
         op = bool_op
@@ -286,6 +288,14 @@ def normalize_predicate(pred, fresh_filters: list) -> RawPredicate:
         # output is truthy
         py_mirror = (None if op.py_fn is None
                      else lambda *vs, _f=op.py_fn: bool(_f(*vs)))
+        if op.sql_template is not None:
+            return RawPredicate(
+                kind="filter",
+                op=FilterOp(name=f"{op.name}-as-filter",
+                            sql_template=lambda *fs, _op=op:
+                            f"CAST({render_sql(_op, fs)} AS BOOLEAN)",
+                            py_fn=py_mirror),
+                infields=infields)
         if op.column_fn is not None:
             # the py_fn mirror rides along for the in-memory platform;
             # the Spark compiler always takes the column path

@@ -25,6 +25,20 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _full_plan(df) -> str:
+    """``_plan`` with every scan's PushedFilters list in full: the scan
+    metadata is otherwise cut at ``spark.sql.maxMetadataStringLength``
+    characters, and ``?``-var guards put one ``IsNotNull`` per bound
+    column at its head."""
+    conf = df.sparkSession.conf
+    old = conf.get("spark.sql.maxMetadataStringLength")
+    conf.set("spark.sql.maxMetadataStringLength", "100000")
+    try:
+        return _plan(df)
+    finally:
+        conf.set("spark.sql.maxMetadataStringLength", old)
+
+
 def test_join_broadcasts_small_dims(spark, sf_dir):
     """nation (25 rows) must come in as a broadcast side, never shuffled."""
     df = entry_mod.revenue_per_nation(spark, sf_dir)
@@ -45,7 +59,7 @@ def test_scan_prunes_columns(spark, sf_dir):
 def test_filter_pushed_to_scan(spark, sf_dir):
     """The q1 shipdate filter must reach the parquet reader."""
     df = entry_mod.q1_pricing_summary(spark, sf_dir)
-    plan = _plan(df)
+    plan = _full_plan(df)
     assert "PushedFilters: [" in plan
     scan = plan[plan.index("lineitem"):]
     assert "LessThanOrEqual(l_shipdate" in scan
@@ -63,12 +77,38 @@ def test_first_n_no_full_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in _plan(df)
 
 
+def _semi_anti_subqueries(df) -> list:
+    """The subquery (right) side of every left-semi/anti join in the
+    optimized plan, as JVM plan nodes."""
+    sides, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Join" and \
+                node.joinType().toString() in ("LeftSemi", "LeftAnti"):
+            sides.append(node.right())
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return sides
+
+
 def test_semi_and_anti_joins_not_inner(spark, sf_dir):
     """Existence gensets must compile to semi/anti joins, not join+distinct."""
     semi = entry_mod.segments_with_big_orders(spark, sf_dir)
     anti = entry_mod.customers_without_orders(spark, sf_dir)
     assert "LeftSemi" in _optimized(semi)
     assert "LeftAnti" in _optimized(anti)
+    # a left-semi/anti join never multiplies rows, so the subquery keys are
+    # not deduplicated first (that was one more shuffle and Spark job)
+    from cascalog_spark import q
+
+    cust = entry_mod._t(spark, sf_dir, "customer")
+    orders = entry_mod._t(spark, sf_dir, "orders")
+    plain_semi = q(["?ck"], (cust, {"c_custkey": "?ck"}),
+                   (orders, {"o_custkey": "?ck"}, ":>", True)).to_df(spark)
+    for df in (plain_semi, anti):
+        sides = _semi_anti_subqueries(df)
+        assert sides
+        assert all("Aggregate" not in side.toString() for side in sides)
 
 
 def test_native_agg_partial_aggregation(spark, sf_dir):
@@ -763,3 +803,58 @@ def test_fanout_persist_prunes_unused_columns(spark):
     header = _cached_relation(plans[0]).splitlines()[0]
     assert "p#" in header and "n#" in header
     assert "s#" not in header and "v#" not in header
+
+
+def _interactive_queries(spark, sf_dir) -> dict:
+    """One seeded ``q(...)`` per interactive benchmark template, over the
+    test tables."""
+    from perfbench import templates
+
+    src = {n: entry_mod._t(spark, sf_dir, n)
+           for n in ("customer", "orders", "lineitem", "part", "supplier")}
+    return {name: templates.TEMPLATES[name](src, k)
+            for name, k, _rep in next(templates.rounds(0))}
+
+
+def test_var_guards_are_pushable_isnotnull(spark, sf_dir):
+    """``?``-var guards compile to ``isnotnull`` conjuncts, which reach the
+    scan as PushedFilters; ``na.drop`` compiled to ``atleastnnonnulls``,
+    which cannot be pushed down and which Catalyst copied into join
+    conditions."""
+    queries = _interactive_queries(spark, sf_dir)
+    for name, qy in queries.items():
+        opt = _optimized(qy.to_df(spark))
+        assert "atleastnnonnulls" not in opt, name
+        assert "isnotnull(" in opt, name
+    plan = _full_plan(queries["filter_range"].to_df(spark))
+    scan = next(line for line in plan.splitlines()
+                if "orders" in line and "PushedFilters" in line)
+    assert "IsNotNull(o_orderkey)" in scan
+    assert "IsNotNull(o_totalprice)" in scan
+
+
+def test_to_df_round_trip_budget(spark, sf_dir, monkeypatch):
+    """``to_df`` builds each planner node from SQL expression strings, not
+    from per-``Column`` PySpark calls, each of which costs several py4j
+    round trips for its call-site capture.  Built from Columns, the eight
+    interactive templates took 161-510 round trips per ``to_df``; the
+    budget is half the smallest.  Only this thread's commands count: py4j
+    sends the detach messages of collected proxies from a finalizer
+    thread."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    queries = _interactive_queries(spark, sf_dir)
+    me, calls = threading.get_ident(), [0]
+    for cls in (ClientServerConnection, GatewayConnection):
+        def counting(self, command, _send=cls.send_command):
+            calls[0] += threading.get_ident() == me
+            return _send(self, command)
+        monkeypatch.setattr(cls, "send_command", counting)
+    for name, qy in queries.items():
+        qy.to_df(spark)  # first use loads classes on the JVM side
+        calls[0] = 0
+        qy.to_df(spark)
+        assert 0 < calls[0] <= 80, (name, calls[0])

@@ -343,6 +343,11 @@ def test_combinators_compose_python_ops(spark):
     col_only = column_filter("col_only", lambda a: a > 0)
     with pytest.raises(ValueError, match="cannot combine"):
         c.all_filters(is_small, col_only)
+    # a built-in (SQL template) cannot take a user Column op's output
+    inc = c.column_op("inc", lambda a: a + 1)
+    with pytest.raises(ValueError, match="cannot take the output"):
+        q(["?y"], ([(1,)], "?x"),
+          (c.comp(c.odd, inc), "?x", ":>", "?y")).to_df(spark)
 
 
 def test_expr_op_sql_template(spark):
@@ -358,6 +363,65 @@ def test_expr_op_sql_template(spark):
     res = q(["?s"], ([("a",), ("b",)], "?x"),
             (lit, "?x", "~z", ":>", "?s")).run(spark)
     assert sorted(res) == [("a~z",), ("b~z",)]
+
+
+def test_sql_lit_spells_constants_as_f_lit_types():
+    from cascalog_spark.ops import sql_lit
+
+    assert sql_lit(0.1) == "0.1D"  # a bare 0.1 parses as DECIMAL(1,1)
+    assert sql_lit(-2.5) == "(-2.5D)"
+    assert sql_lit(1e-05) == "1e-05D"
+    assert sql_lit(float("nan")) == "CAST('NaN' AS DOUBLE)"
+    assert sql_lit(float("inf")) == "CAST('Infinity' AS DOUBLE)"
+    assert sql_lit(float("-inf")) == "CAST('-Infinity' AS DOUBLE)"
+    assert sql_lit(7) == "7" and sql_lit(-7) == "(-7)"
+    assert sql_lit(True) == "true" and sql_lit(None) == "NULL"
+    assert sql_lit("it's") == "'it\\'s'"
+    import datetime
+    import decimal
+
+    for v in (datetime.date(2020, 1, 1), datetime.datetime(2020, 1, 1),
+              decimal.Decimal("1.5"), b"x", 1 << 70):
+        with pytest.raises(TypeError):
+            sql_lit(v)
+
+
+def test_sql_op_constants_keep_f_lit_types(spark):
+    """Constants in SQL-template ops type like ``F.lit``: a float is a
+    double (not a DECIMAL), ±inf/NaN are doubles, and a date (no exact SQL
+    spelling) is bound through ``F.lit`` and stays a date."""
+    import datetime
+    import math
+
+    from pyspark.sql import types as T
+
+    from cascalog_spark.ops import expr_op
+
+    scale = expr_op("scale", "{0} * {1}")
+    df = q(["?s"], ([(1,), (2,)], "?x"),
+           (scale, "?x", 0.1, ":>", "?s")).to_df(spark)
+    assert df.schema["s"].dataType == T.DoubleType()
+    assert sorted(r[0] for r in df.collect()) == [0.1, 0.2]
+
+    vals = [(1.0,), (float("inf"),), (float("-inf"),), (float("nan"),)]
+
+    def run(*preds):
+        # Spark orders NaN above +inf and NaN = NaN
+        return sorted("nan" if math.isnan(r[0]) else r[0]
+                      for r in q(["?x"], (vals, "?x"), *preds).run(spark))
+
+    assert run((c.lt, "?x", float("inf"))) == [float("-inf"), 1.0]
+    assert run((c.gt, "?x", float("-inf")), (c.lt, "?x", float("nan"))) \
+        == [1.0, float("inf")]
+    assert run((c.eq, "?x", float("nan"))) == ["nan"]
+
+    d1, d2 = datetime.date(2020, 1, 1), datetime.date(2021, 6, 1)
+    rows = [(d1, "a"), (d2, "b")]
+    assert q(["?s"], (rows, d2, "?s")).run(spark) == [("b",)]
+    got = q(["?d"], (rows, "?d", "_"),
+            (c.gte, "?d", datetime.date(2021, 1, 1))).to_df(spark)
+    assert got.schema["d"].dataType == T.DateType()
+    assert got.collect() == [(d2,)]
 
 
 def test_python_filter_as_value_with_trap(spark):

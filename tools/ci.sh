@@ -3,8 +3,9 @@
 #   1. pytest suite (correctness, plan gates, property fuzzes)
 #   2. driver-faithful strict oracle check over every queries() entry
 #      (dtype-sensitive — stricter than the pytest replica)
-#   3. perfbench smoke: one short seeded run of each benchmarked workload
-#      (BENCHMARK.json); fails when a run's output checks fail
+#   3. perfbench: its own tests, then one short seeded run of each
+#      benchmarked workload (BENCHMARK.json); fails when a run's output
+#      checks fail
 #   4. gated scaling smokes (exit nonzero on a blown ratio)
 # Usage: bash tools/ci.sh [--quick]   (--quick skips the smokes)
 set -euo pipefail
@@ -16,7 +17,8 @@ CSPARK_FUZZ="${CSPARK_FUZZ:-8}" python -m pytest tests/ -q
 echo "== 2/4 strict oracle check (sf0.01) =="
 python tools/driver_check.py
 
-echo "== 3/4 perfbench (interactive, pipeline) =="
+echo "== 3/4 perfbench (tests, interactive, pipeline) =="
+python3 -m pytest perfbench/test_perfbench.py -q
 for w in interactive pipeline; do
   line="$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 15 \
           --trace 0 | tail -n 1)"
