@@ -193,8 +193,8 @@ def _run_once(spark, qs, name):
     # query persisted without a handle: entries are independent, so
     # any frame still cached after the action is a cross-query
     # storage leak (see BASELINE.md round-5 bench-hygiene note)
-    for handle in ("_prefix_scan_cache", "_cosine_sig_cache",
-                   "_tfidf_cache", "_pagerank_cache"):
+    for handle in ("_cosine_sig_cache", "_tfidf_cache",
+                   "_pagerank_cache"):
         cache = getattr(df, handle, None)
         if cache is None:
             continue

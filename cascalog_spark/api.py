@@ -2,7 +2,8 @@
 
 Entry points (api.clj:100-140):
 - ``Query`` / ``q``        ≈ ``<-``  (define a query; composable as a generator)
-- ``Query.to_df(spark)``   ≈ compile (the ClojureFlow analog is the DataFrame)
+- ``Query.to_df(spark)``   ≈ compile (the ClojureFlow analog is
+  ``compiler._Flow``, which owns every persist and trap a compile makes)
 - ``Query.run(spark)``     ≈ ``??-`` (execute, tuples back to driver)
 - ``execute(spark, q, sink)`` ≈ ``?-`` (execute into sink taps)
 - ``combine`` / ``union``  ≈ api.clj:178-192
@@ -15,7 +16,7 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from . import vars as V
-from .compiler import Compiler
+from .compiler import _Flow, active_flow, load_source
 from .planner import MergeNode, Node, ProjectionNode, build_plan
 from .predicates import is_generator, normalize_query
 
@@ -39,6 +40,7 @@ class Query:
         # (parse.clj:104-154)
         self._nq = normalize_query(self.outfields, self.predicates, self.options)
         self._plan = build_plan(self._nq)
+        self._flows: list[_Flow] = []  # to_df's flows still holding state
 
     # -- planning ------------------------------------------------------------
 
@@ -46,50 +48,47 @@ class Query:
         return self._plan
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        """Compile to a DataFrame with user-facing column names."""
-        compiler = Compiler(spark, trap=self.options.get("trap"))
-        df = self._to_df_with(compiler)
-        self._persisted = compiler.persisted
+        """Compile to a DataFrame with user-facing column names.
+
+        Called while a flow is compiling or running (inside ``run``,
+        ``execute``, ``run_many``, or a wrapper generator they reach),
+        the compile joins that flow, whose opener owns its persists and
+        traps.  Otherwise this is an open-ended compile: the caller runs
+        its own actions, so the flow's persists and traps stay parked on
+        this Query until ``unpersist()`` and ``flush_traps()``."""
+        flow = active_flow()
+        if flow is not None:
+            return self.compile_into(flow)[0]
+        flow = _Flow(spark)
+        try:
+            df = self.compile_into(flow)[0]
+        except BaseException:
+            flow.release()
+            raise
+        if flow.handles or flow.traps:
+            self._flows.append(flow)
         return df
 
-    def _to_df_with(self, compiler: Compiler) -> DataFrame:
-        """Compile with a caller-supplied Compiler (multi-sink ``execute``
-        shares one fan-out memo across queries this way; flow.clj:96-112
-        Semigroup-summed flows)."""
-        # dynamic typing: remember which OUTPUT positions hold pickled
-        # Python objects so run() can decode them (to_df leaves binary)
-        df, self._pickled_idx = compiler.compile_output(
-            self.plan(), out_names(self.outfields))
-        self._trap_dfs = compiler.trap_dfs
-        self._nested_trapped = compiler.nested_trapped
+    def compile_into(self, flow: _Flow):
+        """Compile into ``flow``: ``(frame, output names, output positions
+        holding pickled Python objects)``."""
+        df, names, pidx = flow.compile(self.plan(), out_names(self.outfields),
+                                       self.options.get("trap"))
         limit = self.options.get("limit")
         if limit is not None:
             # extension option (no reference analog): cap rows after the
             # final projection; compiles to GlobalLimit/CollectLimit
             df = df.limit(int(limit))
-        if compiler.prefix_caches:
-            # surface the prefix_assoc scan persist on the FINAL frame
-            # (projection wrapping drops python attrs) so callers can
-            # unpersist after their action
-            df._prefix_scan_cache = (
-                compiler.prefix_caches[0] if len(compiler.prefix_caches) == 1
-                else compiler.prefix_caches)
-        return df
+        return df, names, pidx
 
     def flush_traps(self) -> None:
-        """Write diverted error rows to the trap sink (:trap option,
-        operations.clj:617-644).  Runs on execute()/run(); each trapped op
-        contributes its own row shape."""
-        trap = self.options.get("trap")
-        for tdf in getattr(self, "_trap_dfs", []):
-            if hasattr(trap, "save_df"):
-                trap.save_df(tdf)
-            elif callable(trap):
-                trap(tdf)
-        # multi-trap scoping (cascading_api_test.clj:209-225): inner
-        # subqueries flush to their OWN trap sinks
-        for sub in getattr(self, "_nested_trapped", []):
-            sub.flush_traps()
+        """Write the rows diverted by ``to_df``'s compiles to their trap
+        sinks (:trap option, operations.clj:617-644) — each subquery's
+        to its own trap.  ``run``/``execute``/``run_many`` flush the
+        traps of the flows they open themselves."""
+        for flow in self._flows:
+            flow.flush_traps()
+        self._flows = [f for f in self._flows if f.handles]
 
     def run(self, spark: SparkSession | None = None, *,
             platform: str | None = None) -> list[tuple]:
@@ -100,7 +99,9 @@ class Query:
         session is given) compiles to DataFrames; ``platform='local'`` (the
         default when ``spark`` is omitted) interprets the same logical plan
         in pure Python — no JVM — for in-memory generators and Python ops
-        (exec_local.py documents the supported surface)."""
+        (exec_local.py documents the supported surface).  On Spark the
+        run owns its flow: traps are flushed and persists released before
+        it returns."""
         if platform is None:
             platform = "spark" if spark is not None else "local"
         if platform == "local":
@@ -112,23 +113,16 @@ class Query:
                              "(expected 'spark' or 'local')")
         if spark is None:
             raise ValueError("platform='spark' needs a SparkSession")
-        rows = [tuple(r) for r in self.to_df(spark).collect()]
-        pidx = set(getattr(self, "_pickled_idx", []))
-        if pidx:
-            import pickle as _pkl
-            rows = [tuple(_pkl.loads(v) if i in pidx and v is not None
-                          else v for i, v in enumerate(r)) for r in rows]
-        self.flush_traps()
-        self.unpersist()
-        return rows
+        return run_many(spark, self)[0]
 
     def unpersist(self) -> None:
-        """Release fan-out caches created by compile (persist-on-fan-out);
-        called automatically after run()/execute() actions.  No-op if the
-        plan had no shared subqueries."""
-        for df in getattr(self, "_persisted", []):
-            df.unpersist()
-        self._persisted = []
+        """Release the persists (fan-out, trap split, ``prefix_assoc``
+        scan) that ``to_df``'s compiles of this Query made; traps not yet
+        flushed stay flushable.  ``run``/``execute``/``run_many`` release
+        their own flows' persists, so they need no call."""
+        for flow in self._flows:
+            flow.release()
+        self._flows = [f for f in self._flows if f.traps]
 
     def describe(self) -> str:
         """Pretty-print the LOGICAL plan (planner IR) — expand-query analog
@@ -137,7 +131,11 @@ class Query:
 
     def explain(self, spark: SparkSession, mode: str = "formatted") -> None:
         """api.clj:71-86 ``explain`` — Catalyst plan instead of a DOT file."""
-        self.to_df(spark).explain(mode=mode)
+        flow = _Flow(spark)
+        try:
+            self.compile_into(flow)[0].explain(mode=mode)
+        finally:
+            flow.release()
 
     def describe_dot(self, path: str | None = None) -> str:
         """Logical plan as Graphviz DOT (api.clj:71-86 writes the flow DOT
@@ -193,13 +191,7 @@ class _MergedGen:
         self.distinct = distinct
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        dfs = []
-        for g in self.gens:
-            df = g.to_df(spark) if hasattr(g, "to_df") else g
-            if not isinstance(df, DataFrame):
-                comp = Compiler(spark)
-                df = comp._source_df(g)
-            dfs.append(df)
+        dfs = [_frame(spark, g) for g in self.gens]
         base = dfs[0]
         out = base
         for d in dfs[1:]:
@@ -241,9 +233,7 @@ class _BoundGen:
         self.names = names
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        g = self.gen
-        df = g.to_df(spark) if hasattr(g, "to_df") else (
-            g if isinstance(g, DataFrame) else Compiler(spark)._source_df(g))
+        df = _frame(spark, self.gen)
         if self.cols is not None:
             # subquery columns carry sanitized names (?f6 → f6) — accept
             # the logic-var spelling too (api_test.clj:711-719 selects
@@ -257,7 +247,7 @@ class _BoundGen:
     def run(self, spark: SparkSession) -> list[tuple]:
         """test?- convenience: select-fields/name-vars results run
         directly as queries in the reference tests."""
-        return [tuple(r) for r in self.to_df(spark).collect()]
+        return run_many(spark, self)[0]
 
 
 def select_fields(gen, fields) -> _BoundGen:
@@ -349,6 +339,10 @@ def execute(spark: SparkSession, *args) -> None:
     of the run (the same persist-on-fan-out machinery that dedupes a
     subquery referenced twice WITHIN a query), so a shared scan/join feeds
     every sink without recomputation.
+
+    The call owns every persist and trap its compiles make, also those of
+    queries inside wrapper generators: traps are flushed after the last
+    sink, and persists are released on return or error.
     """
     def _is_sink(s):
         if isinstance(s, list):
@@ -381,69 +375,23 @@ def execute(spark: SparkSession, *args) -> None:
         if not (isinstance(p, (tuple, list)) and len(p) == 2):
             raise TypeError(f"execute: expected (query, sink) pair, got {p!r}")
 
-    # cross-query fan-out census: a generator used by several sinks' plans
-    # persists exactly like one used twice within a plan
-    counts: dict[int, int] = {}
-    seen: set[str] = set()
-    census = Compiler(spark)
-    for qy, _ in pairs:
-        if isinstance(qy, Query):
-            census._count_subquery_sources(qy.plan(), counts, seen)
-    # cross-QUERY filter pushdown below the fan-out persist (reference
-    # README.md:63-66): collect every consumer occurrence's filter chain
-    # so the shared cache materializes only rows some sink needs
-    occs: dict[int, list] = {}
-    if any(n > 1 for n in counts.values()):
-        occ_nodes: set[str] = set()
-        occ_srcs: set[int] = set()
-        for qy, _ in pairs:
-            if isinstance(qy, Query):
-                census._collect_pushdown_occs(qy.plan(), occs, occ_nodes,
-                                              occ_srcs, [])
-    shared_memo: dict[int, DataFrame] = {}
-    persisted: list[DataFrame] = []
-
-    try:
-        for qy, sink in pairs:
-            if isinstance(qy, Query):
-                comp = Compiler(spark, trap=qy.options.get("trap"))
-                comp._src_counts = counts
-                comp._src_memo = shared_memo
-                comp._pushdown_occs = occs
-                comp.persisted = persisted
-                df = qy._to_df_with(comp)
-            elif isinstance(qy, DataFrame):
-                df = qy
-            elif hasattr(qy, "to_df"):
-                df = qy.to_df(spark)
-            elif is_generator(qy):
-                # taps and literal-rows collections are runnable directly
-                df = Compiler(spark)._source_df(qy)
-            else:
-                raise TypeError(f"not a query/generator: {qy!r}")
-            _sink_df(df, sink, getattr(qy, "outfields", None))
-            if hasattr(qy, "flush_traps"):
-                qy.flush_traps()
-    finally:
-        for df in persisted:
-            df.unpersist()
-        for qy, _ in pairs:
-            if hasattr(qy, "unpersist"):
-                qy.unpersist()
+    _run(spark, [(qy, lambda df, _pidx, sink=sink,
+                  fields=getattr(qy, "outfields", None):
+                  _sink_df(df, sink, fields)) for qy, sink in pairs])
 
 
 def run_many(spark: SparkSession, *queries) -> list[list[tuple]]:
     """??- with several queries (api.clj:113-140 ``run-to-memory!`` /
     flow.clj all-to-memory): execute them as ONE action set — shared
     subquery generators compile once (same fan-out machinery as multi-sink
-    ``execute``) — and return each query's tuples in order."""
+    ``execute``) — and return each query's tuples in order.  The call
+    owns its flow: traps are flushed and persists released on return."""
     results: list[list[tuple]] = [[] for _ in queries]
 
-    def _mem_sink(i, qy):
-        def sink(df):
+    def collect(i):
+        def sink(df, pidx):
             rows = [tuple(r) for r in df.collect()]
-            pidx = set(getattr(qy, "_pickled_idx", []))
-            if pidx:  # decode pickled-object outputs, like Query.run()
+            if pidx:  # decode pickled-object outputs
                 import pickle as _pkl
                 rows = [tuple(_pkl.loads(v) if j in pidx and v is not None
                               else v for j, v in enumerate(r))
@@ -451,8 +399,39 @@ def run_many(spark: SparkSession, *queries) -> list[list[tuple]]:
             results[i] = rows
         return sink
 
-    execute(spark, [(qy, _mem_sink(i, qy)) for i, qy in enumerate(queries)])
+    _run(spark, [(qy, collect(i)) for i, qy in enumerate(queries)])
     return results
+
+
+def _run(spark: SparkSession, pairs) -> None:
+    """The one path of ``run``, ``run_many`` and ``execute``: every
+    (generator, sink) pair compiles into ONE flow, so a subquery several
+    sinks share is computed once; each frame goes to its
+    ``sink(frame, pickled positions)``, then the traps are flushed, and
+    the persists are released even on error."""
+    flow = _Flow(spark)
+    try:
+        for gen, _ in pairs:
+            if isinstance(gen, Query):
+                flow.census(gen.plan())
+        for gen, sink in pairs:
+            if isinstance(gen, Query):
+                df, _names, pidx = gen.compile_into(flow)
+            else:
+                with flow.active():
+                    df, pidx = _frame(spark, gen), []
+            sink(df, pidx)
+        flow.flush_traps()
+    finally:
+        flow.release()
+
+
+def _frame(spark: SparkSession, gen) -> DataFrame:
+    """Any generator as a DataFrame.  A query in it compiles into the
+    active flow, if a call opened one."""
+    if hasattr(gen, "to_df"):
+        return gen.to_df(spark)
+    return load_source(spark, gen)[0]
 
 
 class _BroadcastGen:
@@ -468,10 +447,7 @@ class _BroadcastGen:
     def to_df(self, spark: SparkSession) -> DataFrame:
         from pyspark.sql import functions as F
 
-        g = self.gen
-        df = g.to_df(spark) if hasattr(g, "to_df") else (
-            g if isinstance(g, DataFrame) else Compiler(spark)._source_df(g))
-        return F.broadcast(df)
+        return F.broadcast(_frame(spark, self.gen))
 
     def local_rows(self, source_rows):
         # broadcast is a physical hint — a no-op in memory
@@ -492,11 +468,7 @@ class _SetOpGen:
         self.left, self.right, self.op = left, right, op
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        def _df(g):
-            return g.to_df(spark) if hasattr(g, "to_df") else (
-                g if isinstance(g, DataFrame) else Compiler(spark)._source_df(g))
-
-        l, r = _df(self.left), _df(self.right)
+        l, r = _frame(spark, self.left), _frame(spark, self.right)
         r = r.toDF(*l.columns)
         return l.intersect(r) if self.op == "intersect" else l.exceptAll(r)
 
@@ -591,10 +563,7 @@ class _CheckpointGen:
 
     def to_df(self, spark: SparkSession) -> DataFrame:
         if self._df is None:
-            g = self.gen
-            df = g.to_df(spark) if hasattr(g, "to_df") else (
-                g if isinstance(g, DataFrame) else Compiler(spark)._source_df(g))
-            self._df = df.localCheckpoint(eager=True)
+            self._df = _frame(spark, self.gen).localCheckpoint(eager=True)
         return self._df
 
     _local = None
@@ -728,11 +697,7 @@ class _CrossGen:
         self.left, self.right = left, right
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        def _df(g):
-            return g.to_df(spark) if hasattr(g, "to_df") else (
-                g if isinstance(g, DataFrame) else Compiler(spark)._source_df(g))
-
-        return _df(self.left).crossJoin(_df(self.right))
+        return _frame(spark, self.left).crossJoin(_frame(spark, self.right))
 
     def local_rows(self, source_rows):
         lf, lrows = source_rows(self.left)
@@ -794,7 +759,7 @@ def first_n(gen, n: int, sort=None, reverse: bool = False):
         __cascalog_generator__ = True
 
         def to_df(self, spark: SparkSession) -> DataFrame:
-            df = gen.to_df(spark) if hasattr(gen, "to_df") else gen
+            df = _frame(spark, gen)
             if sort:
                 cols = sort if isinstance(sort, (list, tuple)) else [sort]
                 from pyspark.sql import functions as F

@@ -33,6 +33,8 @@ Physical-design notes for 100 TB scale:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
 from typing import Any
 
 from pyspark import StorageLevel
@@ -80,98 +82,58 @@ def _batched_udf(fn, returns, n_out: int, n_in: int):
     return F.udf(lambda *v: tuple(fn(*v)), struct_t, useArrow=True)
 
 
-class Compiler:
-    def __init__(self, spark: SparkSession, namer: V.ColumnNamer | None = None,
-                 trap=None):
+_ACTIVE: ContextVar["_Flow | None"] = ContextVar("cascalog_flow",
+                                                 default=None)
+
+
+class _Flow:
+    """Everything compiling one or more queries creates — the analog of
+    Cascalog's ``ClojureFlow`` (cascading/types.clj:49), which ``?-`` sums
+    over several sinks (flow.clj:96-112):
+
+    - ``sources``: the source memo, id(generator) → (frame, column
+      layout, pickled columns), so a subquery compiles once per flow;
+    - ``occs``: the fan-out census, id(generator) → its consumer
+      occurrences, each a GeneratorNode with the unbroken chain of row
+      filters right above it (the pushdown below a fan-out persist);
+    - ``handles``: every frame the compile persisted (fan-out, trap
+      split, ``prefix_assoc`` scan);
+    - ``traps``: (trap sink, diverted rows) pairs.
+
+    The caller that opens a flow flushes its traps and releases its
+    handles.  While a flow compiles, it is the active flow: a query
+    reached through a wrapper generator (``first_n``, ``combine``, …)
+    compiles into it instead of leaving handles of its own."""
+
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.namer = namer or V.ColumnNamer()
-        self._memo: dict[str, DataFrame] = {}
-        # :trap option (options.clj:56, operations.clj:617-644): rows whose
-        # Python op throws are diverted to the trap instead of failing the job
-        self.trap = trap
-        self.trap_dfs: list[DataFrame] = []
-        # subquery generators carrying their OWN :trap (multi-trap
-        # scoping, cascading_api_test.clj:209-225): recorded here so the
-        # outer query's flush also flushes the inner query's diverted
-        # rows to the INNER trap sink
-        self.nested_trapped: list = []
-        # fan-out sharing (SURVEY §4: memoized zipper walk → "persist() when
-        # fan-out > 1"): a subquery generator referenced by several branches
-        # compiles once and is persisted so the action computes it once
-        # instead of once per branch (Catalyst's ReuseExchange only dedupes
-        # identical *exchange* subtrees, not arbitrary recomputation)
-        self._src_memo: dict[int, DataFrame] = {}
-        self._src_counts: dict[int, int] | None = None
-        # cross-consumer filter pushdown below the fan-out persist
-        # (reference README.md:63-66, its own declared unfinished
-        # priority): id(source) -> [(GeneratorNode, [chained filter
-        # nodes])] per consumer occurrence.  When EVERY occurrence
-        # filters, the disjunction is applied BEFORE persist so the
-        # cache materializes only rows some consumer needs.
-        self._pushdown_occs: dict[int, list] | None = None
-        self.persisted: list[DataFrame] = []
-        # prefix_assoc bufferiters persist their scan intermediate; handles
-        # surface on the final DataFrame as _prefix_scan_cache for release
-        self.prefix_caches: list[DataFrame] = []
-        # dynamic typing (SURVEY §1.2 / conf.clj:86-94 Kryo analog):
-        # physical column names currently holding PICKLED Python objects —
-        # heterogeneous raw-collection columns and ``returns="object"`` op
-        # outputs.  Python-op inputs on these are transparently unpickled.
-        self.pickled_cols: set[str] = set()
-        self._n_lits = 0  # temporary F.lit columns (see _sql_args)
+        self.sources: dict[int, tuple] = {}
+        self.occs: dict[int, list] = {}
+        self.seen: set[str] = set()  # plan nodes the census has walked
+        self.handles: list[DataFrame] = []
+        self.traps: list[tuple[Any, DataFrame]] = []
 
-    # -- entry ---------------------------------------------------------------
-
-    def _count_subquery_sources(self, node: Node, counts: dict[int, int],
-                                seen: set[str]) -> None:
-        if node.node_id in seen:
+    def census(self, node: Node, chain: tuple = ()) -> None:
+        """Record every subquery-source occurrence under ``node``.  The
+        walk enters a subquery's own plan once, so a generator shared
+        between nesting levels (TPC-H Q11/Q15's view, used per group and
+        under a scalar aggregate of itself) counts as fan-out too."""
+        if node.node_id in self.seen:
             return
-        seen.add(node.node_id)
-        src = getattr(node, "source", None)
-        if isinstance(node, GeneratorNode):
-            if hasattr(src, "__cascalog_generator__"):
-                counts[id(src)] = counts.get(id(src), 0) + 1
-                # recurse INTO the subquery's own plan (once) so a
-                # generator shared between nesting levels — e.g. TPC-H
-                # Q11/Q15's view used both per-group and under a scalar
-                # aggregate of itself — counts as fan-out and persists
-                # instead of recomputing its whole upstream per branch
-                if counts[id(src)] == 1 and hasattr(src, "plan"):
-                    self._count_subquery_sources(src.plan(), counts, seen)
-            return
-        for child in (src, getattr(node, "left", None),
-                      getattr(node, "right", None),
-                      getattr(node, "sub", None),
-                      *getattr(node, "sources", [])):
-            if isinstance(child, Node):
-                self._count_subquery_sources(child, counts, seen)
-
-    def _collect_pushdown_occs(self, node: Node, occs: dict[int, list],
-                               seen_nodes: set[str], seen_srcs: set[int],
-                               chain: list) -> None:
-        """Mirror of ``_count_subquery_sources``'s traversal that ALSO
-        records, per subquery-source occurrence, the unbroken chain of
-        row-filtering nodes sitting directly on the GeneratorNode (Column-
-        expressible filters and implicit equalities).  Used to build the
-        below-persist pushdown predicate; see ``_pushdown_pred``."""
-        if node.node_id in seen_nodes:
-            return
-        seen_nodes.add(node.node_id)
+        self.seen.add(node.node_id)
         if isinstance(node, GeneratorNode):
             src = node.source
             if hasattr(src, "__cascalog_generator__"):
-                occs.setdefault(id(src), []).append((node, chain))
-                if id(src) not in seen_srcs and hasattr(src, "plan"):
-                    seen_srcs.add(id(src))
-                    self._collect_pushdown_occs(src.plan(), occs,
-                                                seen_nodes, seen_srcs, [])
+                occ = self.occs.setdefault(id(src), [])
+                occ.append((node, chain))
+                if len(occ) == 1 and hasattr(src, "plan"):
+                    self.census(src.plan())
             return
         if isinstance(node, EqualityFilterNode) or (
                 isinstance(node, FilterNode)
                 and (node.op.sql_template is not None
                      or node.op.column_fn is not None)):
-            self._collect_pushdown_occs(node.source, occs, seen_nodes,
-                                        seen_srcs, chain + [node])
+            self.census(node.source, chain + (node,))
             return
         for child in (getattr(node, "source", None),
                       getattr(node, "left", None),
@@ -179,8 +141,116 @@ class Compiler:
                       getattr(node, "sub", None),
                       *getattr(node, "sources", [])):
             if isinstance(child, Node):
-                self._collect_pushdown_occs(child, occs, seen_nodes,
-                                            seen_srcs, [])
+                self.census(child)
+
+    def compile(self, plan: Node, names: list[str], trap=None):
+        """Compile a query plan into this flow; see
+        ``Compiler.compile_output``.  A plan the census never walked (one
+        reached through a wrapper generator) gets a census and source
+        memo of its own, as a separate compile would, while its handles
+        and traps still land here."""
+        flow = self
+        if self.seen and plan.node_id not in self.seen:
+            flow = _Flow(self.spark)
+            flow.handles, flow.traps = self.handles, self.traps
+        flow.census(plan)
+        with flow.active():
+            return Compiler(flow, trap).compile_output(plan, names)
+
+    @contextmanager
+    def active(self):
+        """Make this the flow that nested queries join."""
+        token = _ACTIVE.set(self)
+        try:
+            yield self
+        finally:
+            _ACTIVE.reset(token)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        # MEMORY_AND_DISK: spills, never OOMs
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self.handles.append(df)
+        return df
+
+    def flush_traps(self) -> None:
+        """Write each query's diverted rows to that query's own trap sink
+        (operations.clj:617-644; multi-trap scoping,
+        cascading_api_test.clj:209-225), once."""
+        for sink, tdf in self.traps:
+            if hasattr(sink, "save_df"):
+                sink.save_df(tdf)
+            elif callable(sink):
+                sink(tdf)
+        self.traps.clear()
+
+    def release(self) -> None:
+        for df in self.handles:
+            df.unpersist()
+        self.handles.clear()
+
+
+def active_flow() -> _Flow | None:
+    """The flow being compiled or run right now, if any."""
+    return _ACTIVE.get()
+
+
+def load_source(spark: SparkSession, source: Any):
+    """A DataFrame, tap or literal-rows generator as ``(frame, pickled
+    column names)``."""
+    if isinstance(source, DataFrame):
+        return source, set()
+    if hasattr(source, "load_df"):  # Tap protocol
+        return source.load_df(spark), set()
+    if not isinstance(source, (list, tuple)):
+        raise TypeError(f"not a generator: {source!r}")
+    if len(source) == 0:
+        # reference rejects empty generators (api.clj:167-176)
+        raise ValueError("can't use an empty collection as a generator")
+    rows = [r if isinstance(r, (tuple, list)) else (r,) for r in source]
+    rows = [tuple(r) for r in rows]
+    # dynamic typing: a column mixing value TYPES (the reference's
+    # Kryo-serialized heterogeneous tuples, api_test.clj:617-628) would be
+    # silently string-coerced by createDataFrame — pickle it instead and
+    # record the column for transparent decode
+    n_cols = len(rows[0])
+    mixed, widened = set(), set()
+    for i in range(n_cols):
+        ts = {type(r[i]) for r in rows if r[i] is not None}
+        if len(ts) > 1:
+            # pure numeric mixes widen to double (the reference's own
+            # testing semantics normalizes numbers to doubles)
+            if ts <= {int, float}:
+                widened.add(i)
+            else:
+                mixed.add(i)
+    if mixed or widened:
+        # None stays a SQL NULL (never pickled) so `?`-var non-nullable
+        # semantics still drop it downstream
+        rows = [tuple(pickle.dumps(v) if i in mixed and v is not None
+                      else float(v) if i in widened and v is not None
+                      else v
+                      for i, v in enumerate(r)) for r in rows]
+    df = spark.createDataFrame(rows)
+    return df, ({df.columns[i] for i in mixed} if mixed else set())
+
+
+class Compiler:
+    """One query's walk, compiling into a ``_Flow``."""
+
+    def __init__(self, flow: _Flow, trap=None):
+        self.flow = flow
+        self.spark = flow.spark
+        self.namer = V.ColumnNamer()
+        self._memo: dict[str, DataFrame] = {}
+        # :trap option (options.clj:56, operations.clj:617-644): rows whose
+        # Python op throws are diverted to the trap instead of failing the job
+        self.trap = trap
+        # dynamic typing (SURVEY §1.2 / conf.clj:86-94 Kryo analog):
+        # physical column names currently holding PICKLED Python objects —
+        # heterogeneous raw-collection columns and ``returns="object"`` op
+        # outputs.  Python-op inputs on these are transparently unpickled.
+        self.pickled_cols: set[str] = set()
+        self._n_lits = 0  # temporary F.lit columns (see _sql_args)
 
     @staticmethod
     def _col_deterministic(df: DataFrame, col) -> bool:
@@ -200,7 +270,8 @@ class Compiler:
         except Exception:  # analysis failure / API drift: assume the worst
             return False
 
-    def _pushdown_pred(self, df: DataFrame, occ_list: list):
+    def _pushdown_pred(self, df: DataFrame, src_cols: list[str],
+                       pickled: set[str], occ_list: list):
         """Disjunction of per-consumer filter conjunctions over a shared
         source's output columns.  Returns None (no pushdown) unless EVERY
         consumer occurrence contributes at least one deterministic filter
@@ -208,8 +279,6 @@ class Compiler:
         unfiltered ones.  Skipping an individual component only WEAKENS
         the pushed predicate (consumers re-apply their own filters on
         top), so partial expressibility stays correct."""
-        src_cols = df.columns
-        pickled = getattr(df, "__cs_pickled__", set())
 
         def phys(colref):
             if isinstance(colref, int):
@@ -271,15 +340,13 @@ class Compiler:
         return disj
 
     @staticmethod
-    def _pushdown_prune(df: DataFrame, occ_list: list):
+    def _pushdown_keep(src_cols: list[str], occ_list: list):
         """Column pruning below the fan-out persist: cache only the
         UNION of source columns any consumer binds (col_bindings +
         const_filters).  Unlike the filter pushdown this needs no
         per-consumer opt-in — an unused column is unused, period.
-        Positional bindings are preserved via ``__cs_orig_cols__`` (the
-        pre-prune column list) which ``_compile_GeneratorNode`` uses to
-        resolve int colrefs by NAME after the select."""
-        src_cols = df.columns
+        Returns the kept columns, or None to keep them all; positional
+        bindings still resolve against ``src_cols`` by name."""
         used: set[str] = set()
         for gen, _chain in occ_list:
             for colref in list(gen.col_bindings.values()) + \
@@ -295,26 +362,13 @@ class Compiler:
         keep = [c for c in src_cols if c in used]
         if not keep or len(keep) == len(src_cols):
             return None
-        out = df.select(*keep)
-        out.__cs_orig_cols__ = src_cols
-        return out
-
-    def _census(self, node: Node) -> None:
-        """Fan-out census of the whole plan, once per compiler."""
-        if self._src_counts is None:
-            self._src_counts = {}
-            self._count_subquery_sources(node, self._src_counts, set())
-            if self._pushdown_occs is None and \
-                    any(n > 1 for n in self._src_counts.values()):
-                self._pushdown_occs = {}
-                self._collect_pushdown_occs(node, self._pushdown_occs,
-                                            set(), set(), [])
+        return keep
 
     def compile_output(self, node: Node, names: list[str]):
         """Compile a query plan with its output columns named ``names``.
         The root projection and the rename are one ``selectExpr``.
-        Returns ``(frame, output positions holding pickled objects)``."""
-        self._census(node)
+        Returns ``(frame, names, output positions holding pickled
+        objects)``."""
         if isinstance(node, ProjectionNode):
             df = self._compile_ProjectionNode(node, names)
             cols = [self.namer.col(f) for f in node.fields]
@@ -322,12 +376,12 @@ class Compiler:
             df = self.compile(node)
             cols = df.columns
             df = df.toDF(*names)
-        return df, [i for i, c in enumerate(cols) if c in self.pickled_cols]
+        return df, names, [i for i, c in enumerate(cols)
+                           if c in self.pickled_cols]
 
     def compile(self, node: Node) -> DataFrame:
         """Memoized walk (reference: zip.clj:47-59 visited-map keyed on node
         identifier — a subquery referenced twice compiles once)."""
-        self._census(node)
         df = self._memo.get(node.node_id)
         if df is None:
             df = self._dispatch(node)
@@ -421,113 +475,58 @@ class Compiler:
                  if V.is_non_nullable(f)]
         return df.filter(" AND ".join(conds)) if conds else df
 
-    def _source_df(self, source: Any) -> DataFrame:
-        if isinstance(source, DataFrame):
-            return source
-        if hasattr(source, "load_df"):  # Tap protocol
-            return source.load_df(self.spark)
-        if hasattr(source, "__cascalog_generator__"):  # subquery
-            df = self._src_memo.get(id(source))
-            if df is None:
-                if hasattr(source, "_to_df_with") and \
-                        hasattr(source, "options"):
-                    # child compiler SHARING the fan-out memo: a generator
-                    # referenced both here and inside the nested subquery
-                    # compiles (and persists) once across nesting levels
-                    child = Compiler(
-                        self.spark, trap=source.options.get("trap"))
-                    child._src_memo = self._src_memo
-                    child._src_counts = self._src_counts
-                    child._pushdown_occs = self._pushdown_occs
-                    child.persisted = self.persisted
-                    child.prefix_caches = self.prefix_caches
-                    df = source._to_df_with(child)
-                    self.nested_trapped.extend(child.nested_trapped)
-                else:
-                    df = source.to_df(self.spark)
-                # dynamic typing: surface the subquery's pickled output
-                # positions so the OUTER query decodes them at op inputs
-                pidx = getattr(source, "_pickled_idx", None)
-                if pidx:
-                    df.__cs_pickled__ = {df.columns[i] for i in pidx}
-                if hasattr(source, "flush_traps") and \
-                        getattr(source, "options", {}).get("trap") is not None:
-                    self.nested_trapped.append(source)
-                cnt = (self._src_counts or {}).get(id(source), 0)
-                if cnt > 1:
-                    # cross-consumer filter + column pushdown BELOW the
-                    # persist point: only when the collected occurrences
-                    # account for every census-counted consumer (a
-                    # partial view must never narrow the cache)
-                    occ = (self._pushdown_occs or {}).get(id(source), [])
-                    if len(occ) == cnt:
-                        pk = getattr(df, "__cs_pickled__", None)
-                        pred = self._pushdown_pred(df, occ)
-                        if pred is not None:
-                            df = df.filter(pred)
-                        pruned = self._pushdown_prune(df, occ)
-                        if pruned is not None:
-                            df = pruned
-                        if pk is not None:  # re-attach across rewrites
-                            df.__cs_pickled__ = {c for c in pk
-                                                 if c in df.columns}
-                    # MEMORY_AND_DISK: spills, never OOMs
-                    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                    self.persisted.append(df)
-                self._src_memo[id(source)] = df
-            return df
-        if isinstance(source, (list, tuple)):
-            if len(source) == 0:
-                # reference rejects empty generators (api.clj:167-176)
-                raise ValueError("can't use an empty collection as a generator")
-            rows = [r if isinstance(r, (tuple, list)) else (r,) for r in source]
-            rows = [tuple(r) for r in rows]
-            # dynamic typing: a column mixing value TYPES (the reference's
-            # Kryo-serialized heterogeneous tuples, api_test.clj:617-628)
-            # would be silently string-coerced by createDataFrame — pickle
-            # it instead and record the column for transparent decode
-            n_cols = len(rows[0])
-            mixed, widened = set(), set()
-            for i in range(n_cols):
-                ts = {type(r[i]) for r in rows if r[i] is not None}
-                if len(ts) > 1:
-                    # pure numeric mixes widen to double (the reference's
-                    # own testing semantics normalizes numbers to doubles)
-                    if ts <= {int, float}:
-                        widened.add(i)
-                    else:
-                        mixed.add(i)
-            if mixed or widened:
-                # None stays a SQL NULL (never pickled) so `?`-var
-                # non-nullable semantics still drop it downstream
-                rows = [tuple(pickle.dumps(v) if i in mixed and v is not None
-                              else float(v) if i in widened and v is not None
-                              else v
-                              for i, v in enumerate(r)) for r in rows]
-            df = self.spark.createDataFrame(rows)
-            if mixed:
-                df.__cs_pickled__ = {df.columns[i] for i in mixed}
-            return df
-        raise TypeError(f"not a generator: {source!r}")
+    def _source(self, source: Any):
+        """A generator as ``(frame, column layout, pickled columns)``; the
+        layout is None where only the frame knows it.
+
+        A subquery generator compiles once per flow.  One the census
+        counted more than once is persisted, so the action computes it
+        once instead of once per branch (SURVEY §4: memoized zipper walk
+        → persist on fan-out; Catalyst's ReuseExchange dedupes only
+        identical exchanges).  Its consumers' filters and columns are
+        pushed below the persist first (reference README.md:63-66), so
+        the cache holds only rows and columns some consumer needs."""
+        if not hasattr(source, "__cascalog_generator__"):
+            df, pickled = load_source(self.spark, source)
+            return df, None, pickled
+        flow = self.flow
+        rec = flow.sources.get(id(source))
+        if rec is not None:
+            return rec
+        if hasattr(source, "compile_into"):  # a Query joins this flow
+            df, cols, pidx = source.compile_into(flow)
+            pickled = {cols[i] for i in pidx}
+        else:  # a wrapper: queries inside it find the active flow
+            df, cols, pickled = source.to_df(self.spark), None, set()
+        occ = flow.occs.get(id(source), [])
+        if len(occ) > 1:
+            cols = cols or df.columns
+            pred = self._pushdown_pred(df, cols, pickled, occ)
+            if pred is not None:
+                df = df.filter(pred)
+            keep = self._pushdown_keep(cols, occ)
+            if keep is not None:
+                df = df.select(*keep)
+            df = flow.persist(df)
+        rec = flow.sources[id(source)] = (df, cols, pickled)
+        return rec
 
     # -- node rules ----------------------------------------------------------
 
     def _compile_GeneratorNode(self, node: GeneratorNode) -> DataFrame:
-        df = self._source_df(node.source)
-        src_cols = None
+        df, src_cols, src_pickled = self._source(node.source)
 
         def phys(colref):
-            # a column-pruned fan-out persist records its pre-prune layout;
-            # positional bindings resolve against THAT order, by name
+            # positional bindings resolve against the source's layout (a
+            # column-pruned fan-out persist keeps its pre-prune one), by name
             nonlocal src_cols
             if not isinstance(colref, int):
                 return colref
             if src_cols is None:
-                src_cols = getattr(df, "__cs_orig_cols__", None) or df.columns
+                src_cols = df.columns
             return src_cols[colref]
 
         cb = {v: phys(colref) for v, colref in node.col_bindings.items()}
-        src_pickled = getattr(df, "__cs_pickled__", set())
         for v, p in cb.items():
             if p in src_pickled:
                 self.pickled_cols.add(self.namer.col(v))
@@ -549,8 +548,13 @@ class Compiler:
                   if V.is_non_nullable(v)]
         if conds:
             df = df.filter(" AND ".join(conds))
-        return df.selectExpr(*[f"{_src_ref(cb[v])} AS {self._q(v)}"
-                               for v in node.fields])
+        out = [self.namer.col(v) for v in node.fields]
+        # a pruned persist never matches: its layout holds a column that
+        # no consumer binds
+        if src_cols == out == [cb[v] for v in node.fields]:
+            return df  # already these columns, in this order
+        return df.selectExpr(*[f"{_src_ref(cb[v])} AS {sql_quote(c)}"
+                               for v, c in zip(node.fields, out)])
 
     def _compile_ApplicationNode(self, node: ApplicationNode) -> DataFrame:
         df = self.compile(node.source)
@@ -637,17 +641,14 @@ class Compiler:
         # point once for the main action AND the later trap flush
         udf = F.udf(wrapped, struct_t).asNondeterministic()
         tmp = "__mapout"
-        # explicit MEMORY_AND_DISK: an unbounded error fraction (every row
-        # could divert) must spill, never OOM — the trap split point caches
-        # the FULL input width until flush_traps runs
-        df = df.withColumn(tmp, udf(*args)).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        self.persisted.append(df)
+        # MEMORY_AND_DISK: an unbounded error fraction (every row could
+        # divert) must spill, never OOM — the trap split point caches the
+        # FULL input width until the flow flushes its traps
+        df = self.flow.persist(df.withColumn(tmp, udf(*args)))
         err = F.col(tmp).getField("__error")
         orig_cols = [c for c in df.columns if c != tmp]
-        self.trap_dfs.append(
-            df.filter(err.isNotNull())
-              .select(*orig_cols, err.alias("__error")))
+        self.flow.traps.append((self.trap, df.filter(err.isNotNull())
+                                .select(*orig_cols, err.alias("__error"))))
         df = df.filter(err.isNull())
         for i, name in enumerate(out_cols):
             df = df.withColumn(name, F.col(tmp).getField(f"_{i}"))
@@ -717,13 +718,11 @@ class Compiler:
                                      T.StructField("__error", T.StringType())])
             udf = F.udf(safe, struct_t).asNondeterministic()
             tmp = "__filt"
-            df2 = df.withColumn(tmp, udf(*args)).persist(
-                StorageLevel.MEMORY_AND_DISK)
-            self.persisted.append(df2)
+            df2 = self.flow.persist(df.withColumn(tmp, udf(*args)))
             err = F.col(tmp).getField("__error")
-            self.trap_dfs.append(
-                df2.filter(err.isNotNull())
-                   .select(*df.columns, err.alias("__error")))
+            self.flow.traps.append((self.trap, df2.filter(err.isNotNull())
+                                    .select(*df.columns,
+                                            err.alias("__error"))))
             return df2.filter(err.isNull() & F.col(tmp).getField("keep")) \
                       .drop(tmp)
         pfn, _ = self._py_io_wrap(op.py_fn, op, node.infields)
@@ -1130,10 +1129,10 @@ class Compiler:
 
         Parallelism is #groups x blocks instead of #groups.  Requires
         ``:sort`` — an additive scan without an order is meaningless.
-        The persisted intermediate rides on the result as
-        ``_prefix_scan_cache`` (same lifecycle convention as
-        ``cosine_pairs``): unpersist after the consuming action, or let
-        Spark's LRU evict it.
+        The persisted scan is a handle of the compiling flow, released
+        with the flow's other persists (``run``/``execute`` on return,
+        ``Query.unpersist()`` after ``to_df``).  Spark's LRU eviction
+        would only drop cached blocks, never the persist itself.
         """
         import itertools
 
@@ -1242,8 +1241,7 @@ class Compiler:
             if out_buf:
                 yield pd.DataFrame(out_buf, columns=out_names)
 
-        scanned = df.mapInPandas(scan, out_schema) \
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+        scanned = self.flow.persist(df.mapInPandas(scan, out_schema))
 
         # -- 3. block finals -> exclusive per-group prefix (tiny table)
         w = (Window.partitionBy(*group_cols_eff).orderBy("__blk")
@@ -1262,11 +1260,7 @@ class Compiler:
                             + F.coalesce(F.col("__carry"), F.lit(0)))
                            .cast(scan_type))
                .drop("__blk", "__carry", "__seq"))
-        if global_agg:
-            out = out.drop(gkey)
-        out._prefix_scan_cache = scanned
-        self.prefix_caches.append(scanned)
-        return out
+        return out.drop(gkey) if global_agg else out
 
     def _compile_pandas_grouping(self, df, node: GroupingNode,
                                  aggs=None) -> DataFrame:

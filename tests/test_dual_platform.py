@@ -299,6 +299,7 @@ def test_local_generator_wrappers(spark):
     agree with Spark (intersect = DISTINCT, except = multiset ALL)."""
     from cascalog_spark import (broadcast_gen, checkpoint_gen,
                                 cross_join, except_gens, intersect_gens)
+    from cascalog_spark.sources import MemoryTap
     from cascalog_spark.testing import assert_produces
 
     A = [(1,), (2,), (2,), (3,)]
@@ -320,3 +321,9 @@ def test_local_generator_wrappers(spark):
     got = q(["?n", "?c"], (ck, "?n"), (c.count, "?c")).run(
         platform="local")
     assert sorted(got) == [(1, 1), (2, 2), (3, 1)]
+    # first_n straight over a tap or literal rows, not only over a query
+    top = first_n(MemoryTap(["n"], A), 2, sort="n")
+    assert sorted(tuple(r) for r in top.to_df(spark).collect()) == \
+        [(1,), (2,)]
+    assert_produces(q(["?n"], (top, "?n")), spark, [(1,), (2,)])
+    assert_produces(q(["?n"], (first_n(B, 4), "?n")), spark, B)

