@@ -1060,7 +1060,7 @@ def orders_bigticket_hybrid(spark, sf_dir):
 
 def doc_dup_clusters(spark, sf_dir):
     """Near-dup clustering end-to-end: MinHash-LSH candidate pairs →
-    distributed connected components (min-label propagation, iterative,
+    distributed connected components (large/small-star contraction,
     localCheckpoint per round — dedup.py dedup_clusters).  Oracle: the same
     components via DuckDB's recursive CTE transitive closure over the same
     md5-minhash pairs."""

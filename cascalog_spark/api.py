@@ -521,6 +521,7 @@ class Subquery:
         self.outfields = list(outfields)
         self._preds: list[tuple] = []
         self._options: dict = {}
+        self._queries: list[Query] = []  # to_df's Queries holding state
 
     def predicate(self, op, *fields) -> "Subquery":
         self._preds.append((op, *fields))
@@ -542,7 +543,24 @@ class Subquery:
         return Query(self.outfields, *self._preds, **self._options)
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return self.build().to_df(spark)
+        """``Query.to_df`` of the built query; an open-ended compile's
+        persists and traps stay reachable through ``unpersist()`` and
+        ``flush_traps()``."""
+        query = self.build()
+        df = query.to_df(spark)
+        if query._flows:
+            self._queries.append(query)
+        return df
+
+    def flush_traps(self) -> None:
+        for query in self._queries:
+            query.flush_traps()
+        self._queries = [qy for qy in self._queries if qy._flows]
+
+    def unpersist(self) -> None:
+        for query in self._queries:
+            query.unpersist()
+        self._queries = [qy for qy in self._queries if qy._flows]
 
     def run(self, spark: SparkSession) -> list[tuple]:
         return self.build().run(spark)

@@ -231,8 +231,7 @@ def minhash_lsh_candidates_incremental(
         batch: DataFrame, index: DataFrame | None, id_col: str,
         text_col: str = "text", num_perm: int = 16, bands: int = 4,
         shingle_k: int = 3,
-        materialize: bool = False,
-        pairs_shape: str = "pairs") -> tuple[DataFrame, DataFrame]:
+        materialize: bool = False) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup detection for continuous ingest: candidate
     pairs of a NEW batch against (a) the existing ``minhash_index`` and
     (b) itself, plus the batch's own index rows to append.
@@ -275,42 +274,18 @@ def minhash_lsh_candidates_incremental(
         # the signature pass once per stage instead of once per batch.
         buckets = buckets.localCheckpoint()
     bidx = buckets.drop("__bhs")
-    if pairs_shape == "star":
-        # Connectivity-only callers (the streaming ingest step: pairs
-        # feed CC and a membership anti-join, never a weighted graph):
-        # emit each bucket as a STAR on its min id instead of the full
-        # within-bucket clique.  Same connected components — a clique
-        # and a star over the same member set connect identically — so
-        # cluster minima, survivors and cross-drops are unchanged, but
-        # a hot bucket of k docs yields k-1 pairs instead of k(k-1)/2
-        # (the banded join's quadratic blowup is the candidate-volume
-        # skew bound at 100 TB).  One window over the bucket table's
-        # own (band, bh) pass, no join.
-        from pyspark.sql import Window
-
-        w_b = Window.partitionBy("band", "bh")
-        self_pairs = (buckets
-                      .withColumn("__mn", F.min(id_col).over(w_b))
-                      .where(F.col("__mn") < F.col(id_col))
-                      .select(F.col("__mn").alias("id_a"),
-                              F.col(id_col).alias("id_b")))
-    elif pairs_shape == "pairs":
-        a, bb = buckets.alias("a"), buckets.alias("b")
-        self_pairs = (a.join(bb, on=["band", "bh"], how="inner")
-                      .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        if bands > 1:
-            earlier = F.zip_with(
-                F.slice(F.col("a.__bhs"), F.lit(1), F.col("band")),
-                F.slice(F.col("b.__bhs"), F.lit(1), F.col("band")),
-                lambda x, y: x == y)
-            self_pairs = self_pairs.where(~F.exists(earlier, lambda z: z))
-        self_pairs = self_pairs.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"))
-    else:
-        raise ValueError("minhash_lsh_candidates_incremental: "
-                         f"pairs_shape must be pairs|star, got "
-                         f"{pairs_shape!r}")
+    a, bb = buckets.alias("a"), buckets.alias("b")
+    self_pairs = (a.join(bb, on=["band", "bh"], how="inner")
+                  .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+    if bands > 1:
+        earlier = F.zip_with(
+            F.slice(F.col("a.__bhs"), F.lit(1), F.col("band")),
+            F.slice(F.col("b.__bhs"), F.lit(1), F.col("band")),
+            lambda x, y: x == y)
+        self_pairs = self_pairs.where(~F.exists(earlier, lambda z: z))
+    self_pairs = self_pairs.select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"))
     if index is None:
         return self_pairs, bidx
     cross = (index.alias("a")
@@ -444,85 +419,16 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str = "text",
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b", max_iter: int = 20,
-                   method: str = "star",
-                   skew_salt: int | None = None) -> DataFrame:
+                   id_b: str = "id_b", max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup candidate pairs →
     ``(node, cluster)`` with cluster = min id in the component — the step
     that turns pairwise candidates into keep/drop decisions (keep one doc
-    per cluster).
+    per cluster).  The round count is left on the result as
+    ``_cc_rounds``.
 
-    ``method='star'`` (default): alternating large-star/small-star
-    contraction (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond") — O(log n) rounds regardless of topology, so
-    CHAIN-shaped dup clusters (A~B~C~... transitive near-dup chains in
-    web-scale corpora) cannot blow the round count.  Default since r6:
-    label propagation's O(diameter) rounds were the last scale-risky
-    default in the dedup family; the two methods are equivalence-tested
-    on random graphs and the star path carries a log₂ round-count gate.
-
-    ``method='label'``: distributed min-label propagation — each node
-    takes the min label among itself and its neighbors; iterate to fixed
-    point.  Rounds = O(graph diameter) (typically 2-4 for blob-shaped
-    near-dup clusters — slightly cheaper per round than star when the
-    diameter is KNOWN small); convergence detected by the
-    strictly-decreasing label sum (one cheap scalar agg per round, no
-    row-wise diff join); each round localCheckpoints to cut lineage —
-    nothing ever collects to the driver.
-
-    Same output contract; both methods leave the round count on the
-    result as ``_cc_rounds``.
-
-    ``skew_salt=s`` (star method only): hub-guard for graphs with very
-    high-degree nodes — each star's per-node minimum becomes a salted
-    two-stage aggregate (map-side combined, bounded tasks) joined back
-    onto the edges (a join AQE's skew handling CAN split, unlike a
-    window).  Identical labels; default ``None`` keeps the one-window
-    shape, whose per-task bound is the max node degree.
-    """
-    if method == "star":
-        return _dedup_clusters_star(pairs, id_a, id_b, max_iter,
-                                    skew_salt=skew_salt)
-    if method != "label":
-        raise ValueError(f"dedup_clusters: method must be label|star, "
-                         f"got {method!r}")
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = e.union(e.select(F.col("dst").alias("src"),
-                             F.col("src").alias("dst"))).distinct() \
-             .localCheckpoint(eager=False)
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
-    prev_sum = None
-    rounds = 0
-    for _ in range(max_iter):
-        neigh = (edges.join(labels, edges.dst == labels.node)
-                 .groupBy("src").agg(F.min("label").alias("nmin")))
-        # eager=False: the label-sum action below materializes it —
-        # one driver job per round instead of two (see star loop)
-        labels = (labels.join(neigh, labels.node == neigh.src, "left")
-                  .select(F.col("node"),
-                          F.least(F.col("label"),
-                                  F.coalesce(F.col("nmin"), F.col("label")))
-                          .alias("label"))
-                  .localCheckpoint(eager=False))
-        rounds += 1
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    out = labels.withColumnRenamed("label", "cluster")
-    out._cc_rounds = rounds
-    return out
-
-
-def _dedup_clusters_star(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iter: int = 50,
-                         skew_salt: int | None = None) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014).
-
-    Each round rewires the edge set toward stars centered at component
-    minima:
+    Large-star/small-star contraction (Kiveris et al. 2014, "Connected
+    Components in MapReduce and Beyond").  Each round rewires the edge
+    set toward stars centered at component minima:
 
     - LARGE-STAR (per node u over its full neighborhood Γ(u)): connect
       every strictly-larger neighbor v > u to m = min(Γ(u) ∪ {u}).
@@ -531,13 +437,17 @@ def _dedup_clusters_star(pairs: DataFrame, id_a: str = "id_a",
 
     Both are one windowed min over the star's own src-keyed shuffle — no
     join, no per-node state, no driver collect; localCheckpoint per round
-    cuts lineage.  Converges in
-    O(log n) rounds on ANY topology (provably O(log² n), observed ~log n)
-    — on a path graph of 2^k nodes this finishes in ~k rounds where label
+    cuts lineage.  Converges in O(log n) rounds on ANY topology (provably
+    O(log² n), observed ~log n), so CHAIN-shaped dup clusters (A~B~C~...
+    transitive near-dup chains in web-scale corpora) cannot blow the
+    round count: a path of 2^k nodes finishes in ~k rounds where min-label
     propagation needs 2^k.  Convergence = edge multiset fixed point,
-    detected by a (count, xxhash64-sum) fingerprint — two scalars per
+    detected by a (count, bit_xor of xxhash64) fingerprint — two scalars per
     round, collision-safe in practice and only ever terminates EARLY on a
     collision, never produces wrong labels on the final star set.
+
+    A node's whole neighborhood lands in one window task, so a hub's
+    degree bounds that task.
     """
     e = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
          .where(F.col("a").isNotNull() & F.col("b").isNotNull()))
@@ -565,48 +475,16 @@ def _dedup_clusters_star(pairs: DataFrame, id_a: str = "id_a",
     # the per-round state (and the convergence fingerprint sequence) is
     # provably identical — AQE stage jobs per round drop ~2x.
     w_src = Window.partitionBy("src")
-    if skew_salt:
-        # hub guard: the window puts a node's FULL neighborhood in one
-        # task (no AQE help for windows).  With salting, stage 1 is a
-        # map-side-combined groupBy((src, salt)) partial min — bounded
-        # tasks regardless of degree — stage 2 reduces ≤ s partials per
-        # node, and the attach is a JOIN, which AQE skew-join splits at
-        # runtime.  Same minima, same rounds, identical labels; the
-        # edges feeding both join sides are the round's checkpointed
-        # frame, so re-derivation is a cache read, not a recompute.
-        s = int(skew_salt)
-
-        def _with_min(e_df):
-            salt = F.pmod(F.xxhash64("dst"), F.lit(s))
-            partial = (e_df.withColumn("__salt", salt)
-                       .groupBy("src", "__salt")
-                       .agg(F.min("dst").alias("__m1")))
-            mins = (partial.groupBy("src")
-                    .agg(F.min("__m1").alias("__mn")))
-            return e_df.join(mins, on="src")
-
     for _ in range(max_iter):
         # -- large-star: full neighborhood (both directions)
         und = edges.union(edges.select(F.col("dst").alias("src"),
                                        F.col("src").alias("dst")))
-        if skew_salt:
-            lg = _with_min(und).withColumn(
-                "m", F.least(F.col("__mn"), F.col("src")))
-        else:
-            lg = und.withColumn(
-                "m", F.least(F.min("dst").over(w_src), F.col("src")))
+        lg = und.withColumn(
+            "m", F.least(F.min("dst").over(w_src), F.col("src")))
         edges = (lg.where(F.col("dst") > F.col("src"))
                  .select(F.col("dst").alias("src"), F.col("m").alias("dst")))
         # -- small-star: smaller neighbors only (edges stay larger→smaller)
-        if skew_salt:
-            # the large-star output feeds two DIFFERENTLY-KEYED
-            # exchanges here ((src, salt) partial agg + the src-keyed
-            # probe), so exchange reuse cannot dedup it — cut once
-            # (lazy: the fingerprint job below materializes it)
-            edges = edges.localCheckpoint(eager=False)
-            j = _with_min(edges).withColumn("m", F.col("__mn"))
-        else:
-            j = edges.withColumn("m", F.min("dst").over(w_src))
+        j = edges.withColumn("m", F.min("dst").over(w_src))
         # eager=False: the fingerprint action right below is the
         # materializing job (its aggregate scans every partition, and
         # LocalRDDCheckpointData caches the rest at job end) — one
@@ -859,8 +737,7 @@ def containment_dedup(df: DataFrame, id_col: str = "doc_id",
 
 def near_dedup(df: DataFrame, id_col: str = "doc_id",
                text_col: str = "text", num_perm: int = 16, bands: int = 4,
-               shingle_k: int = 3, max_iter: int = 20,
-               cc_method: str = "star", keep: str = "min",
+               shingle_k: int = 3, max_iter: int = 20, keep: str = "min",
                score_col: str | None = None,
                pr_iters: int = 5) -> DataFrame:
     """End-to-end near-duplicate REMOVAL — the composition a corpus
@@ -880,16 +757,14 @@ def near_dedup(df: DataFrame, id_col: str = "doc_id",
     fall to the id tiebreak; float sum-order noise is ~1e-17).
 
     Scale shape: inherits the bucketed candidate join (never all-pairs)
-    and the O(log n)-round star-contraction component step (default
-    since r6 — chain-shaped dup clusters can't blow the round count;
-    ``cc_method='label'`` restores min-label propagation for graphs with
-    KNOWN-small diameter); the final keep/drop is one anti-join against
-    the (small) non-representative id set — at 100 TB that set is the
-    duplicate fraction only, not the corpus.  ``keep='best'`` adds one
-    equi-join of the cluster map against the corpus scores plus a
-    per-cluster max-struct aggregate — both keyed on cluster members, so
-    the extra cost also scales with the duplicate fraction, not the
-    corpus."""
+    and the O(log n)-round star-contraction component step (chain-shaped
+    dup clusters can't blow the round count); the final keep/drop is one
+    anti-join against the (small) non-representative id set — at 100 TB
+    that set is the duplicate fraction only, not the corpus.
+    ``keep='best'`` adds one equi-join of the cluster map against the
+    corpus scores plus a per-cluster max-struct aggregate — both keyed on
+    cluster members, so the extra cost also scales with the duplicate
+    fraction, not the corpus."""
     if keep not in ("min", "best", "central"):
         raise ValueError(f"near_dedup: keep must be 'min', 'best' or "
                          f"'central', got {keep!r}")
@@ -897,7 +772,7 @@ def near_dedup(df: DataFrame, id_col: str = "doc_id",
         raise ValueError("near_dedup: keep='best' requires score_col")
     pairs = minhash_lsh_candidates(df, id_col, text_col, num_perm, bands,
                                    shingle_k)
-    clusters = dedup_clusters(pairs, max_iter=max_iter, method=cc_method)
+    clusters = dedup_clusters(pairs, max_iter=max_iter)
     if keep == "min":
         losers = (clusters.where(F.col("node") != F.col("cluster"))
                   .select(F.col("node").alias(id_col)))
@@ -1221,61 +1096,41 @@ def kgram_anchors(df: DataFrame, k: int = 8, id_col: str = "doc_id",
                       gram.alias("gram"))
 
 
-def _gram_dup_anchors(anchors: DataFrame, id_col: str,
-                      skew_salt: int | None) -> DataFrame:
+def _gram_dup_anchors(anchors: DataFrame, id_col: str) -> DataFrame:
     """Anchor rows whose gram is owned by a LOWER-id doc (owner =
-    min(id) per gram), computed in the anchors' own pass.
-
-    Default (``skew_salt=None``): ONE window over the gram key — the
-    fewest-shuffle shape; md5 grams hash uniformly ACROSS keys, but a
-    single boilerplate gram present in a large fraction of documents
-    still lands every occurrence in one task (windows get no AQE skew
-    handling).  ``skew_salt=s`` bounds that task: a salted two-stage
-    min, still window-only —
-
-    1. ``m1 = min(id) OVER (gram, salt)`` with ``salt =
-       pmod(xxhash64(id, pos), s)`` — the hot gram splits ``s`` ways;
-    2. rows with ``m1 < id`` are PROVABLY dup (some smaller doc shares
-       the gram) and never re-shuffle; only rows attaining their salt
-       group's min (``id == m1``, at most one doc's rows per (gram,
-       salt)) go through the second, gram-keyed window, whose input per
-       gram is ≤ s docs' anchor rows — bounded regardless of how hot
-       the gram is.
-
-    Equivalence: every salt group's min id reaches stage 2 (the min is
-    attained by a row of that group), so stage-2's min = the global
-    min; a stage-1 row with ``m1 < id`` satisfies ``owner ≤ m1 < id``.
-    Same dup set, bit-identical downstream.  Both stage-1 branches hang
-    off the same (gram, salt) Exchange, so the tokenize chain below it
-    runs once (ReuseExchange; plan-gated by test)."""
+    min(id) per gram), computed in the anchors' own pass: ONE window over
+    the gram key — the fewest-shuffle shape.  md5 grams hash uniformly
+    ACROSS keys, but a single boilerplate gram present in a large
+    fraction of documents still lands every occurrence in one task
+    (windows get no AQE skew handling)."""
     from pyspark.sql import Window
 
-    if not skew_salt:
-        w_gram = Window.partitionBy("gram")
-        return (anchors
-                .withColumn("__owner", F.min(id_col).over(w_gram))
-                .where(F.col("__owner") < F.col(id_col))
-                .drop("__owner"))
-    s = int(skew_salt)
-    salted = anchors.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(id_col), F.col("pos")),
-                         F.lit(s)))
-    f1 = salted.withColumn(
-        "__m1", F.min(id_col).over(Window.partitionBy("gram", "__salt")))
-    certain = f1.where(F.col("__m1") < F.col(id_col))
-    uncertain = (f1.where(F.col("__m1") == F.col(id_col))
-                 .withColumn("__owner",
-                             F.min(id_col).over(Window.partitionBy("gram")))
-                 .where(F.col("__owner") < F.col(id_col))
-                 .drop("__owner"))
-    return (certain.unionByName(uncertain)
-            .drop("__m1", "__salt"))
+    w_gram = Window.partitionBy("gram")
+    return (anchors
+            .withColumn("__owner", F.min(id_col).over(w_gram))
+            .where(F.col("__owner") < F.col(id_col))
+            .drop("__owner"))
+
+
+def _dup_spans(dup: DataFrame, id_col: str, k: int) -> DataFrame:
+    """Gap-and-island merge of each doc's duplicated anchor positions
+    into maximal token spans ``(id, span_start, span_end)``: consecutive
+    positions share ``pos - row_number()`` (one window by id, one
+    groupBy)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(id_col).orderBy("pos")
+    runs = (dup.withColumn("__rn", F.row_number().over(w))
+            .withColumn("__grp", F.col("pos") - F.col("__rn")))
+    return (runs.groupBy(id_col, "__grp")
+            .agg(F.min("pos").alias("span_start"),
+                 (F.max("pos") + k - 1).cast("int").alias("span_end"))
+            .select(id_col, "span_start", "span_end"))
 
 
 def exact_substring_spans(df: DataFrame, k: int = 8,
                           id_col: str = "doc_id",
-                          text_col: str = "text",
-                          skew_salt: int | None = None) -> DataFrame:
+                          text_col: str = "text") -> DataFrame:
     """Maximal duplicated spans per doc: (id, span_start, span_end,
     span_tokens) in TOKEN offsets, where every k-gram of the span also
     occurs in a LOWER-id document (keep-min-doc ownership, matching
@@ -1300,33 +1155,23 @@ def exact_substring_spans(df: DataFrame, k: int = 8,
     against a pure-Python maximal-common-substring ground truth
     (tests/test_exact_substring_differential.py: missed = extra = 0).
     """
-    from pyspark.sql import Window
-
     # The min-owner-per-gram used to be a separate aggregate joined back
     # onto anchors — which re-ran the tokenize+explode+md5 chain for each
     # side (Spark re-executes branched subtrees) and paid a second
     # gram-keyed Exchange.  min(id) OVER (PARTITION BY gram) computes the
     # same owner in the anchors' own single pass: ONE corpus scan, ONE
     # shuffle, no join (guide §2.4 remove shuffles outright; §3 a window
-    # keyed like the join replaces it).  ``skew_salt`` bounds the hot-key
-    # task for boilerplate-heavy corpora (see _gram_dup_anchors).
+    # keyed like the join replaces it).
     anchors = kgram_anchors(df, k, id_col, text_col)
-    dup = _gram_dup_anchors(anchors, id_col, skew_salt)
-    w = Window.partitionBy(id_col).orderBy("pos")
-    runs = (dup.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__grp", F.col("pos") - F.col("__rn")))
-    return (runs.groupBy(id_col, "__grp")
-            .agg(F.min("pos").alias("span_start"),
-                 (F.max("pos") + k - 1).cast("int").alias("span_end"))
-            .select(F.col(id_col), F.col("span_start"), F.col("span_end"),
-                    (F.col("span_end") - F.col("span_start") + 1)
-                    .cast("int").alias("span_tokens")))
+    spans = _dup_spans(_gram_dup_anchors(anchors, id_col), id_col, k)
+    return spans.withColumn(
+        "span_tokens",
+        (F.col("span_end") - F.col("span_start") + 1).cast("int"))
 
 
 def exact_substring_dedup(df: DataFrame, k: int = 8,
                           id_col: str = "doc_id", text_col: str = "text",
-                          out_col: str = "clean_text",
-                          skew_salt: int | None = None) -> DataFrame:
+                          out_col: str = "clean_text") -> DataFrame:
     """Documents with cross-doc duplicated spans REMOVED (the doc owning
     the span — smallest id — keeps it; later docs lose those tokens).
 
@@ -1344,8 +1189,7 @@ def exact_substring_dedup(df: DataFrame, k: int = 8,
     must be opt-in: pass ``out_col=text_col`` for in-place rewrite.
     (Changed in r5: the default was previously in-place.)
     """
-    spans = exact_substring_spans(df, k, id_col, text_col,
-                                  skew_salt=skew_salt)
+    spans = exact_substring_spans(df, k, id_col, text_col)
     return _strip_spans(df, spans, id_col, text_col, out_col)
 
 
@@ -1393,8 +1237,7 @@ def exact_substring_index(df: DataFrame, k: int = 8,
 def exact_substring_dedup_incremental(
         batch: DataFrame, index_df: DataFrame | None, k: int = 8,
         id_col: str = "doc_id", text_col: str = "text",
-        out_col: str = "clean_text",
-        skew_salt: int | None = None) -> tuple[DataFrame, DataFrame]:
+        out_col: str = "clean_text") -> tuple[DataFrame, DataFrame]:
     """Incremental exact-substring (duplicated-span) dedup: NEW docs lose
     token spans whose every k-gram already exists in the standing
     ``index_df`` OR is owned by a lower-id doc within the batch (the
@@ -1407,16 +1250,13 @@ def exact_substring_dedup_incremental(
     batch's distinct new grams — the corpus is never rescanned, the
     continuous-ingest contract shared with ``exact_dedup_incremental``
     and ``minhash_lsh_candidates_incremental``."""
-    from pyspark.sql import Window
-
     # The batch-internal owner pass is a window, not an aggregate+join —
     # min(id) OVER (PARTITION BY gram) folds owner computation into the
     # anchors' own pass (one tokenize, one shuffle, no self-join; guide
     # §2.4), cutting the anchor-subtree executions from 4 to 3 (the index
     # semi-join and the index update still branch, batch-sized both).
     anchors = kgram_anchors(batch, k, id_col, text_col)
-    batch_dup = (_gram_dup_anchors(anchors, id_col, skew_salt)
-                 .select(id_col, "pos"))
+    batch_dup = _gram_dup_anchors(anchors, id_col).select(id_col, "pos")
     if index_df is not None:
         idx_dup = (anchors.join(index_df.select("gram"), on="gram",
                                 how="left_semi")
@@ -1427,21 +1267,14 @@ def exact_substring_dedup_incremental(
     else:
         dup = batch_dup
         updated = anchors.select("gram").distinct()
-    w = Window.partitionBy(id_col).orderBy("pos")
-    runs = (dup.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__grp", F.col("pos") - F.col("__rn")))
-    spans = (runs.groupBy(id_col, "__grp")
-             .agg(F.min("pos").alias("span_start"),
-                  (F.max("pos") + k - 1).cast("int").alias("span_end"))
-             .select(id_col, "span_start", "span_end"))
+    spans = _dup_spans(dup, id_col, k)
     return _strip_spans(batch, spans, id_col, text_col, out_col), updated
 
 
 def cross_doc_line_dedup(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text", sep: str = "\n",
                          min_chars: int = 1,
-                         out_col: str = "dedup_text",
-                         skew_salt: int | None = None) -> DataFrame:
+                         out_col: str = "dedup_text") -> DataFrame:
     """Cross-document LINE dedup (MassiveText / C4 repeated-boilerplate
     rule at corpus granularity): a line that already appeared in an
     earlier document — ordered by (id, position) — is dropped from every
@@ -1451,11 +1284,11 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str = "doc_id",
 
     All native: posexplode the lines, md5 the trimmed lowercased line as
     the dedup key, one min-struct WINDOW over the key picks the global
-    first owner and marks survivors in the same pass (uniform md5 keys —
-    no skew, no aggregate+join, no second corpus scan), and per-doc
-    reassembly is array_sort over collected (pos, line) structs — no
-    Python.  Two shuffles total (owner window, doc reassembly), each
-    keyed uniformly.
+    first owner and marks survivors in the same pass (no aggregate+join,
+    no second corpus scan), and per-doc reassembly is array_sort over
+    collected (pos, line) structs — no Python.  Two shuffles total (owner
+    window, doc reassembly); a boilerplate line sends all its occurrences
+    to one owner-window task.
 
     Returns the input columns plus ``out_col`` (lines re-joined with
     ``sep``; original ``text_col`` preserved — pass ``out_col=text_col``
@@ -1478,36 +1311,11 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import Window
     me = F.struct(F.col(id_col).alias("__oid"),
                   F.col("__pos").alias("__opos"))
-    if not skew_salt:
-        w_key = Window.partitionBy("__key")
-        owner = F.min(F.when(eligible, me)).over(w_key)
-        kept = (lines.withColumn("__owner", owner)
-                .where((~eligible)
-                       | ((F.col("__owner.__oid") == F.col(id_col))
-                          & (F.col("__owner.__opos") == F.col("__pos")))))
-    else:
-        # hot-key guard (same salted two-stage-min scheme as
-        # _gram_dup_anchors, min-struct flavor): a boilerplate line in
-        # most documents otherwise lands every occurrence in one window
-        # task.  Stage 1 splits each key s ways; only rows ATTAINING
-        # their salt group's min (≤ 1 per (key, salt) — (id, pos) is
-        # unique) reach the key-wide stage 2, so its input per key is
-        # ≤ s rows.  Ineligible rows are always kept, eligible rows
-        # survive iff they are the global first owner — identical set.
-        s = int(skew_salt)
-        f1 = (lines.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(id_col), F.col("__pos")),
-                             F.lit(s)))
-            .withColumn("__m1", F.min(F.when(eligible, me)).over(
-                Window.partitionBy("__key", "__salt"))))
-        keep_cols = [id_col, "__pos", "__line"]
-        inel = f1.where(~eligible).select(*keep_cols)
-        survivors = (f1.where(eligible & (me == F.col("__m1")))
-                     .withColumn("__owner", F.min("__m1").over(
-                         Window.partitionBy("__key")))
-                     .where(me == F.col("__owner"))
-                     .select(*keep_cols))
-        kept = inel.unionByName(survivors)
+    owner = F.min(F.when(eligible, me)).over(Window.partitionBy("__key"))
+    kept = (lines.withColumn("__owner", owner)
+            .where((~eligible)
+                   | ((F.col("__owner.__oid") == F.col(id_col))
+                      & (F.col("__owner.__opos") == F.col("__pos")))))
     rebuilt = (kept.groupBy(id_col)
                .agg(F.array_join(
                    F.transform(
@@ -1574,8 +1382,7 @@ def dedup_quality_report(df: DataFrame, id_col: str = "doc_id",
 
 def leakage_free_split(df: DataFrame, pairs: DataFrame, weights: dict,
                        id_col: str = "doc_id", out_col: str = "split",
-                       seed: int = 42, method: str = "star",
-                       max_iter: int = 20) -> DataFrame:
+                       seed: int = 42, max_iter: int = 20) -> DataFrame:
     """Train/val/test assignment that near-duplicates CANNOT straddle:
     connected components over the candidate ``pairs`` give each doc its
     dup-cluster id, and the split hash is taken over
@@ -1594,7 +1401,7 @@ def leakage_free_split(df: DataFrame, pairs: DataFrame, weights: dict,
     map-side hash.  Weights follow ``split_corpus`` semantics."""
     from .corpus import split_corpus
 
-    clusters = dedup_clusters(pairs, max_iter=max_iter, method=method)
+    clusters = dedup_clusters(pairs, max_iter=max_iter)
     labeled = (df.join(clusters.select(F.col("node").alias(id_col),
                                        F.col("cluster").alias("__cl")),
                        on=id_col, how="left")

@@ -38,9 +38,7 @@ def ingest_batch_near_dedup(batch: DataFrame, index: Optional[DataFrame],
                             id_col: str, text_col: str = "text",
                             num_perm: int = 16, bands: int = 4,
                             shingle_k: int = 3, max_iter: int = 20,
-                            cc_method: str = "star",
                             materialize: bool = False,
-                            pairs_shape: str = "pairs",
                             ) -> tuple[DataFrame, DataFrame]:
     """One ingest step, batch-land: returns ``(survivors, new_index_rows)``.
 
@@ -51,21 +49,14 @@ def ingest_batch_near_dedup(batch: DataFrame, index: Optional[DataFrame],
     ``new_index_rows`` are the SURVIVORS' (id, band, bh) rows — append
     them to the index after writing the survivors.
 
-    ``pairs_shape='star'`` is the hot-bucket guard for production
-    corpora: every pair consumer here is connectivity-only (CC clusters
-    + a membership anti-join), and a bucket's star connects exactly
-    what its clique connects — survivors are IDENTICAL (pinned by
-    test), while a hot bucket of k docs contributes k-1 candidate rows
-    instead of k(k-1)/2.  Default stays 'pairs': at bench scale the
-    tiny self-join broadcasts for free while the star's window pays an
-    exchange+sort (interleaved A/B: ~1s slower per r11 receipt); at
-    100 TB the candidate-volume bound dominates — flip it there."""
+    Within-batch candidates are the banded self-join, so a bucket of k
+    batch docs yields k(k-1)/2 pairs."""
     from ..functions.dedup import (dedup_clusters,
                                    minhash_lsh_candidates_incremental)
 
     pairs, bidx = minhash_lsh_candidates_incremental(
         batch, index, id_col, text_col, num_perm, bands, shingle_k,
-        materialize=materialize, pairs_shape=pairs_shape)
+        materialize=materialize)
     # split: self pairs have both ids in the batch; cross pairs carry an
     # index id on the id_a side.  Membership test via the batch id set —
     # an equi-join on id (batch-sized, no collect).
@@ -79,8 +70,7 @@ def ingest_batch_near_dedup(batch: DataFrame, index: Optional[DataFrame],
                  .join(batch_ids.withColumnRenamed("__bid", "id_a"),
                        on="id_a", how="left_anti")
                  .select(F.col("id_b").alias(id_col)).distinct())
-    clusters = dedup_clusters(self_pairs, max_iter=max_iter,
-                              method=cc_method)
+    clusters = dedup_clusters(self_pairs, max_iter=max_iter)
     self_losers = (clusters.where(F.col("node") != F.col("cluster"))
                    .select(F.col("node").alias(id_col)))
     survivors = (batch
@@ -101,7 +91,6 @@ def stream_near_dedup_ingest(stream_df: DataFrame, out_dir: str,
                              text_col: str = "text",
                              num_perm: int = 16, bands: int = 4,
                              shingle_k: int = 3, max_iter: int = 20,
-                             cc_method: str = "star",
                              checkpoint_dir: Optional[str] = None,
                              query_name: str = "near_dedup_ingest"):
     """Run :func:`ingest_batch_near_dedup` as a ``foreachBatch`` streaming
@@ -122,7 +111,7 @@ def stream_near_dedup_ingest(stream_df: DataFrame, out_dir: str,
                                   exclude_batch=batch_id)
         survivors, new_rows = ingest_batch_near_dedup(
             batch, index, id_col, text_col, num_perm, bands, shingle_k,
-            max_iter, cc_method, materialize=True)
+            max_iter, materialize=True)
         StateDir(out_dir).write(survivors, batch_id)
         StateDir(index_dir).write(new_rows, batch_id)
 

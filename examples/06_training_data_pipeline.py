@@ -52,10 +52,10 @@ docs = docs.join(keep, "doc_id", "left_semi")
 
 # 3. near dedup: MinHash-LSH candidates → connected components → keep the
 #    cluster representative (min id); non-clustered docs pass through.
-#    method='star' = O(log n)-round contraction, safe for chain-shaped
-#    transitive dup clusters (the web-scale topology)
+#    The components step is an O(log n)-round star contraction, safe for
+#    chain-shaped transitive dup clusters (the web-scale topology)
 pairs = minhash_lsh_candidates(docs, "doc_id", num_perm=8, bands=4)
-clusters = dedup_clusters(pairs, method="star")
+clusters = dedup_clusters(pairs)
 drop = clusters.where(F.col("node") != F.col("cluster")) \
                .select(F.col("node").alias("doc_id"))
 docs = docs.join(drop, "doc_id", "left_anti")

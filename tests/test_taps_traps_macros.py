@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from cascalog_spark import c, execute, gen_var, q
+from cascalog_spark import Subquery, c, execute, gen_var, q
 from cascalog_spark.sources import (CascalogTap, CsvTap, MemoryTap,
                                     ParquetTap, TextLineTap, hfs_tap)
 from cascalog_spark.testing import assert_produces
@@ -523,6 +523,12 @@ def _prefix_query():
              (rs, "?i", "?v", ":>", "?i2", "?s"), sort=["?i"])
 
 
+def _subquery_fanout():
+    sub = q(["?p", "?a"], (AGE, "?p", "?a"))
+    return (Subquery("?p1", "?p2").predicate(sub, "?p1", "?a")
+            .predicate(sub, "?p2", "?a"))
+
+
 def _to_df_then_release(spark, query):
     query.to_df(spark).collect()
     query.flush_traps()
@@ -530,13 +536,14 @@ def _to_df_then_release(spark, query):
 
 
 @pytest.mark.parametrize("call", ["run", "execute", "run_many", "to_df"])
-@pytest.mark.parametrize("make", [_fanout_query, _trap_query, _prefix_query],
-                         ids=["fanout", "trap", "prefix_scan"])
+@pytest.mark.parametrize("make", [_fanout_query, _trap_query, _prefix_query,
+                                  _subquery_fanout],
+                         ids=["fanout", "trap", "prefix_scan", "subquery"])
 def test_every_persist_released(spark, make, call):
     """Each handle a compile makes (fan-out subquery, trap split,
-    prefix_assoc scan) is released by the call that owns its flow, or by
-    ``unpersist()`` after ``to_df``: the persistent-RDD set is back to
-    its baseline."""
+    prefix_assoc scan, and a fan-out built through ``Subquery``) is
+    released by the call that owns its flow, or by ``unpersist()`` after
+    ``to_df``: the persistent-RDD set is back to its baseline."""
     from cascalog_spark import run_many
 
     query = make()

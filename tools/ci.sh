@@ -7,17 +7,18 @@
 #      benchmarked workload (BENCHMARK.json); fails when a run's output
 #      checks fail
 #   4. gated scaling smokes (exit nonzero on a blown ratio)
-# Usage: bash tools/ci.sh [--quick]   (--quick skips the smokes)
+#   5. examples, each run as a subprocess (tools/run_examples.py)
+# Usage: bash tools/ci.sh [--quick]   (--quick skips steps 4 and 5)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/4 pytest =="
+echo "== 1/5 pytest =="
 CSPARK_FUZZ="${CSPARK_FUZZ:-8}" python -m pytest tests/ -q
 
-echo "== 2/4 strict oracle check (sf0.01) =="
+echo "== 2/5 strict oracle check (sf0.01) =="
 python tools/driver_check.py
 
-echo "== 3/4 perfbench (tests, interactive, pipeline) =="
+echo "== 3/5 perfbench (tests, interactive, pipeline) =="
 python3 -m pytest perfbench/test_perfbench.py -q
 for w in interactive pipeline; do
   line="$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 15 \

@@ -252,7 +252,7 @@ rounds = {}
 for n in (512, 8192):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    out = dedup_clusters(pairs, method="star", max_iter=40)
+    out = dedup_clusters(pairs, max_iter=40)
     t0 = time.perf_counter()
     bad = out.where(F.col("cluster") != 0).count()
     wall = round(time.perf_counter() - t0, 2)
