@@ -217,17 +217,10 @@ def test_near_dedup_keep_best(spark):
         near_dedup(df, keep="median")
 
 
-#: a boilerplate run planted in half of a corpus: the hot key of the
-#: substring and line dedup owner windows
-_BOILER = ("all rights reserved click here to subscribe to our newsletter "
-           "terms of service apply contact the webmaster for details")
-
-
 def test_cross_doc_line_dedup(spark):
     """First occurrence (by id, then position) keeps a line; later docs
     and later repeats in the SAME doc lose it; short lines exempt;
-    whitespace/case-normalized matching; original text preserved; a line
-    planted in half the corpus survives exactly once."""
+    whitespace/case-normalized matching; original text preserved."""
     from cascalog_spark.functions import cross_doc_line_dedup
 
     rows = [
@@ -249,12 +242,6 @@ def test_cross_doc_line_dedup(spark):
     # original column untouched
     cols = cross_doc_line_dedup(df).columns
     assert cols == ["doc_id", "text", "dedup_text"]
-    hot = spark.createDataFrame(
-        [(i, f"unique line {i} alpha\n"
-          + (_BOILER + "\n" if i % 2 == 0 else "") + f"tail {i}")
-         for i in range(120)], "doc_id int, text string")
-    assert sum(r.dedup_text.count(_BOILER)
-               for r in cross_doc_line_dedup(hot).collect()) == 1
 
 
 def test_dedup_clusters_long_chain_converges(spark):
@@ -287,23 +274,17 @@ def _union_find_clusters(edges):
 
 def test_dedup_clusters_star_equivalence_random_graphs(spark):
     """Large-star/small-star contraction produces the same (node, cluster)
-    map as a union-find reference on three seeded random graphs and on a
-    hub + chain + disjoint-pairs graph (node 0 pairs with half of 400
-    nodes) — same keep/drop decisions."""
+    map as a union-find reference on three seeded random graphs — same
+    keep/drop decisions."""
     import random
 
     from cascalog_spark.functions import dedup_clusters
 
     rng = random.Random(7)
-    graphs = []
-    for _ in range(3):
+    for trial in range(3):
         n = 60
-        graphs.append([(rng.randrange(n), rng.randrange(n))
-                       for _ in range(rng.randrange(20, 80))])
-    graphs.append([(0, i) for i in range(2, 400, 2)]        # the hub
-                  + [(i, i + 1) for i in range(100, 140)]   # a chain
-                  + [(500 + i, 600 + i) for i in range(50)])
-    for trial, edges in enumerate(graphs):
+        edges = [(rng.randrange(n), rng.randrange(n))
+                 for _ in range(rng.randrange(20, 80))]
         pairs = spark.createDataFrame(edges, "id_a int, id_b int")
         got = {r.node: r.cluster
                for r in dedup_clusters(pairs, max_iter=50).collect()}
@@ -1863,8 +1844,7 @@ def test_ivf_kmeans_centroids_bound_cells_under_id_skew(spark):
 def test_exact_substring_spans_and_dedup(spark):
     """Lee et al.-style duplicated-span removal: the lower-id doc keeps
     the shared span, later docs lose exactly those tokens; overlapping
-    k-gram runs merge into one maximal span; a span planted in 100 of
-    200 docs is stripped from all but its owner."""
+    k-gram runs merge into one maximal span."""
     from cascalog_spark.functions import (exact_substring_dedup,
                                           exact_substring_spans)
 
@@ -1887,13 +1867,6 @@ def test_exact_substring_spans_and_dedup(spark):
     assert "nothing shared" in clean[2]
     # default preserves the original text column (lossy rewrite is opt-in)
     assert {r.doc_id: r.text for r in out}[0].startswith("intro A ")
-    hot = spark.createDataFrame(
-        [(i, " ".join(f"w{i}x{j} tok{(i * 7 + j) % 97}" for j in range(10))
-          + (" " + _BOILER if i % 2 == 0 else "")) for i in range(200)],
-        "doc_id int, text string")
-    hot_out = exact_substring_dedup(hot, k=8).collect()
-    assert sum(1 for r in hot_out if "webmaster" in r.text
-               and "webmaster" not in r.clean_text) == 99
 
 
 def test_exact_substring_edge_cases(spark):

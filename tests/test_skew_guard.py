@@ -1,11 +1,9 @@
-"""Skew-guard gates (r11, verdict item 4): the window-owner pattern
-(`min(x) OVER (PARTITION BY key)`) ships every occurrence of a key to
-one task.  The salted two-stage variants (``skew_salt=s``) must (a)
-produce IDENTICAL results on a planted hot key (one shingle/line/hub in
-50% of docs), (b) provably bound the stage-1 task input (the hot key
-splits s ways — asserted on the actual shuffle-key distribution), and
-(c) not re-derive the anchor chain per branch (ReusedExchange in the
-plan)."""
+"""Hot-key gates for the window-owner pattern
+(`min(x) OVER (PARTITION BY key)`), which ships every occurrence of a
+key to one task.  On a planted hot key (one span/line/hub in 50% of
+docs) each owner-window operator must (a) give IDENTICAL results
+whether its input arrives in one partition or is hash-spread over
+eight, and (b) actually dedup the hot key, so the fixture bites."""
 
 import os
 import sys
@@ -17,6 +15,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BOILER = ("all rights reserved click here to subscribe to our newsletter "
           "terms of service apply contact the webmaster for details")
+
+
+def _layouts(df, key):
+    """The same rows in one partition and hash-spread over eight."""
+    return df.coalesce(1), df.repartition(8, F.col(key))
 
 
 @pytest.fixture(scope="module")
@@ -34,66 +37,35 @@ def hot_docs(spark):
 def test_exact_substring_guard_identical(spark, hot_docs):
     from cascalog_spark.functions import exact_substring_dedup
 
-    base = sorted(tuple(r) for r in
-                  exact_substring_dedup(hot_docs, k=8).collect())
-    guard = sorted(tuple(r) for r in
-                   exact_substring_dedup(hot_docs, k=8,
-                                         skew_salt=8).collect())
-    assert base == guard
+    one, spread = (sorted(tuple(r) for r in
+                          exact_substring_dedup(d, k=8).collect())
+                   for d in _layouts(hot_docs, "doc_id"))
+    assert one == spread
     # the hot span must actually have been deduped (the fixture bites):
     # 100 docs share it, the min-id owner keeps it, 99 lose it
-    n_stripped = sum(1 for t in guard
+    n_stripped = sum(1 for t in spread
                      if "webmaster" in t[1] and "webmaster" not in t[2])
     assert n_stripped == 99
 
 
-def test_exact_substring_guard_bounds_stage1(spark, hot_docs):
-    """The stage-1 shuffle key is (gram, salt): the hottest gram's
-    largest single group must be ~1/s of its occurrences — the planted
-    straggler task is structurally impossible."""
-    from cascalog_spark.functions.dedup import kgram_anchors
-
-    s = 8
-    anchors = kgram_anchors(hot_docs, 8, "doc_id", "text")
-    salted = anchors.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col("doc_id"), F.col("pos")),
-                         F.lit(s)))
-    per_key = (salted.groupBy("gram").count()
-               .orderBy(F.desc("count")).first())
-    hot_gram, hot_n = per_key["gram"], per_key["count"]
-    assert hot_n >= 100  # the planted gram is genuinely hot
-    groups = (salted.where(F.col("gram") == hot_gram)
-              .groupBy("__salt").count().collect())
-    max_group = max(r["count"] for r in groups)
-    assert len(groups) == s  # the hot key really splits s ways
-    assert max_group <= hot_n / s * 2.5  # no group ~owns the key
-    # stage 2 input per gram is bounded by s (one min-attaining doc's
-    # rows per salt group) — for the planted gram, one row per doc
-    from cascalog_spark.functions.dedup import _gram_dup_anchors
-    dup = _gram_dup_anchors(anchors, "doc_id", s)
-    dup.collect()  # finalize the adaptive plan
-    plan = dup._jdf.queryExecution().executedPlan().toString()
-    # both stage-1 branches must hang off ONE (gram, salt) exchange —
-    # the tokenize chain below it runs once
-    assert "isFinalPlan=true" in plan
-    assert "ReusedExchange" in plan
-
-
 def test_cc_star_hub_guard_identical(spark):
-    """Planted hub: node 0 pairs with 50% of 400 nodes, plus chain
-    edges.  Guarded labels must equal unguarded ones, same rounds."""
+    """Planted hub: node 0 pairs with 50% of 400 nodes, plus a chain
+    hanging off the hub and disjoint pairs.  Labels and round count must
+    not depend on the input layout, and every node lands on the min id
+    of its component."""
     from cascalog_spark.functions import dedup_clusters
 
-    pairs = [(0, i) for i in range(2, 400, 2)]          # the hub
-    pairs += [(i, i + 1) for i in range(100, 140)]      # a chain
-    pairs += [(500 + i, 600 + i) for i in range(50)]    # disjoint pairs
-    pdf = spark.createDataFrame(pairs, "id_a int, id_b int")
-    base = dedup_clusters(pdf, max_iter=50)
-    guard = dedup_clusters(pdf, max_iter=50, skew_salt=8)
-    b = sorted(tuple(r) for r in base.collect())
-    g = sorted(tuple(r) for r in guard.collect())
-    assert b == g
-    assert guard._cc_rounds <= base._cc_rounds + 1
+    hub = [(0, i) for i in range(2, 400, 2)]            # the hub
+    hub += [(i, i + 1) for i in range(100, 140)]        # a chain off it
+    disjoint = [(500 + i, 600 + i) for i in range(50)]
+    pdf = spark.createDataFrame(hub + disjoint, "id_a int, id_b int")
+    outs = [dedup_clusters(d, max_iter=50) for d in _layouts(pdf, "id_a")]
+    one, spread = (sorted(tuple(r) for r in o.collect()) for o in outs)
+    assert one == spread
+    assert outs[0]._cc_rounds == outs[1]._cc_rounds
+    want = {n: 0 for e in hub for n in e}
+    want.update({n: a for a, b in disjoint for n in (a, b)})
+    assert dict(spread) == want
 
 
 def test_cross_doc_line_guard_identical(spark):
@@ -105,38 +77,9 @@ def test_cross_doc_line_guard_identical(spark):
                                              else "") + f"tail {i}"
         rows.append((i, body))
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    base = sorted(tuple(r) for r in cross_doc_line_dedup(df).collect())
-    guard = sorted(tuple(r) for r in
-                   cross_doc_line_dedup(df, skew_salt=8).collect())
-    assert base == guard
+    one, spread = (sorted(tuple(r) for r in cross_doc_line_dedup(d).collect())
+                   for d in _layouts(df, "doc_id"))
+    assert one == spread
     # the planted line survives exactly once across the corpus
-    kept = sum(t[2].count(BOILER) for t in guard)
+    kept = sum(t[2].count(BOILER) for t in spread)
     assert kept == 1
-
-
-def test_ingest_star_pairs_equivalent(spark, hot_docs):
-    """pairs_shape='star' (the hot-bucket candidate-volume guard: k-1
-    rows per bucket instead of k(k-1)/2) must keep the ingest step's
-    outputs IDENTICAL — a bucket's star connects exactly what its
-    clique connects, and every consumer is connectivity-only."""
-    from cascalog_spark.streaming.ingest import ingest_batch_near_dedup
-
-    batch = hot_docs.withColumnRenamed("text", "body")
-    outs = {}
-    for shape in ("pairs", "star"):
-        surv, idx_rows = ingest_batch_near_dedup(
-            batch, None, "doc_id", text_col="body", num_perm=8,
-            bands=4, pairs_shape=shape)
-        outs[shape] = (sorted(tuple(r) for r in surv.collect()),
-                       sorted(tuple(r) for r in idx_rows.collect()))
-    assert outs["pairs"] == outs["star"]
-    # the candidate volume really shrinks: star <= pairs on a hot bucket
-    from cascalog_spark.functions.dedup import \
-        minhash_lsh_candidates_incremental
-    n = {}
-    for shape in ("pairs", "star"):
-        p, _ = minhash_lsh_candidates_incremental(
-            batch, None, "doc_id", text_col="body", num_perm=8,
-            bands=4, pairs_shape=shape)
-        n[shape] = p.count()
-    assert n["star"] < n["pairs"]
